@@ -320,14 +320,15 @@ def materialize(df) -> None:
 # per saved-structure query, whether its on-disk index existed BEFORE the
 # query's first rep ("warm") or had to be built inside rep 1 ("cold").
 # Publish markers: _CURRENT for SnapshotIndex layouts, _SUCCESS for the
-# plain staged minhash table, _APPEND_DONE for the appended-IVF twin.
+# plain staged minhash table, _APPEND_DONE for the appended IVF and BM25
+# twins (the staged _CURRENT exists before their append runs).
 _INDEX_MARKERS = {
     "sim_ann_ivf_saved": [("ivf", "", "_CURRENT")],
     "sim_hybrid_rrf_ann_saved": [("ivf", "", "_CURRENT")],
     "sim_ann_ivf_appended": [("ivf", "_appended", "_APPEND_DONE")],
     "dedup_minhash_staged": [("ivf", "_minhash", "_SUCCESS")],
     "text_bm25_topk_staged": [("bm25", "", "_CURRENT")],
-    "text_bm25_topk_appended": [("bm25", "_appended", "_CURRENT")],
+    "text_bm25_topk_appended": [("bm25", "_appended", "_APPEND_DONE")],
     "sim_hybrid_rrf_staged": [("bm25", "", "_CURRENT"), ("ivf", "", "_CURRENT")],
 }
 

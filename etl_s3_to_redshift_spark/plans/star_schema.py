@@ -16,8 +16,12 @@ Faithfulness notes (SURVEY.md §5, §7):
   never shuffles for this join.
 
 The full-refresh lifecycle of etl.py:22-34 (drop/create/copy/insert/drop
-staging) collapses to: read → build plans → ``write(mode='overwrite')``;
-``run_pipeline`` mirrors the fail-fast stage structure of etl.py:55-109.
+staging) collapses to: read → build plans → ``write(mode='overwrite')``.
+
+Unlike etl.py:55-109, which runs the INSERT-SELECTs one after another,
+``run_pipeline`` writes the five independent tables concurrently; its
+docstring gives the failure semantics and why the write threads must
+inherit the caller's Spark local properties.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import InheritableThread
 
 from etl_s3_to_redshift_spark.operators.relational import (
     date_parts,
@@ -115,18 +120,13 @@ def build_artists(songs: DataFrame) -> DataFrame:
 
 def build_time(events: DataFrame) -> DataFrame:
     """time dim (reference sql_queries.py:180-189): DISTINCT timestamps with
-    extracted date parts. DISTINCT is applied to the projected tuple — all
-    parts are functions of ts, so this equals DISTINCT ts (8,023 < 8,056
-    events in the reference's golden counts, test_etl.ipynb cell-17)."""
-    parts = date_parts("ts")
-    return events.select(
-        F.col("ts").alias("start_time"),
-        parts["hour"].alias("hour"),
-        parts["day"].alias("day"),
-        parts["week"].alias("week"),
-        parts["month"].alias("month"),
-        parts["year"].alias("year"),
-    ).distinct()
+    extracted date parts. The reference applies DISTINCT to the projected
+    tuple; all parts are functions of ts, so that equals DISTINCT ts
+    (8,023 < 8,056 events in the reference's golden counts,
+    test_etl.ipynb cell-17). Deduplicating ts first shuffles one column
+    instead of six; the parts are derived after the exchange."""
+    times = events.select(F.col("ts").alias("start_time")).distinct()
+    return times.withColumns(date_parts("start_time"))
 
 
 @dataclass
@@ -179,18 +179,51 @@ def run_pipeline(
     """End-to-end full refresh mirroring etl.py:55-109.
 
     read (COPY) → build (INSERT-SELECT) → overwrite-write (full refresh).
-    Fail-fast: any stage exception propagates (the reference prints-and-
-    returns, etl.py:70-106; raising is the honest Spark equivalent).
-    Returns {table: output_path}.
+    Returns {table: output_path} in the reference insert order.
+
+    The five tables are written at the same time, one thread each, so the
+    dimension jobs use the cores the fact write leaves idle during its
+    set-up, tail and commit. Fail-fast: any write exception propagates (the
+    reference prints-and-returns, etl.py:70-106; raising is the honest
+    Spark equivalent). All writes are waited for first, so no job outlives
+    the call, and the first failure in insert order is raised.
+
+    The threads are ``InheritableThread``s: Spark local properties are per
+    thread, and a plain thread would submit its jobs outside the caller's
+    job group and tags, invisible to ``cancelJobGroup`` and per-group
+    metrics. ``InheritableThread.start`` copies them from the caller.
+    ``inheritable_thread_target(spark)`` would copy the same, but when
+    pinned-thread mode is off (``PYSPARK_PIN_THREAD=false``) it returns the
+    session itself instead of a decorator, which then raises a TypeError.
+
+    The staged frames are not persisted although three tables read each:
+    caching the parsed events and songs measured no faster, alone or with
+    the concurrent writes (perfbench ``etl_load`` seeds 11 and 12, 100k
+    events on ``local[2]``: 3.28 vs 3.23 s and 2.78 vs 2.66 s with
+    sequential writes; 2.14 vs 2.02 s and 2.55 vs 1.97 s with concurrent
+    ones).
     """
     events = read_events_json(spark, events_path)
     songs = read_songs_json(spark, songs_path)
-    star = build_star_schema(events, songs)
-    out: dict[str, str] = {}
-    for name, df in star.tables().items():
-        path = f"{out_dir}/{name}"
-        write_parquet(df, path, sort_key=SORT_KEYS[name])
-        out[name] = path
+    tables = build_star_schema(events, songs).tables()
+    out = {name: f"{out_dir}/{name}" for name in tables}
+
+    failures: dict[str, BaseException] = {}
+
+    def write(name: str) -> None:
+        try:
+            write_parquet(tables[name], out[name], sort_key=SORT_KEYS[name])
+        except BaseException as exc:  # raised below, in the caller's thread
+            failures[name] = exc
+
+    threads = [InheritableThread(target=write, args=(name,), session=spark) for name in tables]
+    for thread in threads:
+        thread.start()
+    for thread in threads:
+        thread.join()
+    for name in tables:
+        if name in failures:
+            raise failures[name]
     # Staging cleanup (etl.py:31-34) is implicit: the staged frames are
     # unreferenced lazy plans after this point — nothing was cached.
     return out

@@ -352,7 +352,9 @@ def web_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly least(quota, n_urls) rows — the ordering decides WHICH
     # urls survive, never HOW MANY, and the funnel reports how many.
     # (Row-equality of this arithmetic form vs the materialized
-    # quota-filter count is pinned in tests/test_ops12.py; the DuckDB
+    # quota-filter count is pinned in
+    # tests/test_web.py::test_quota_kept_count_is_least_quota_nurls and
+    # ::test_curation_funnel_matches_materialized_quota; the DuckDB
     # oracle still computes n2 through the plain window.)
     groups = (
         docs.select("doc_id", canonical_url(F.col("url")).alias("canonical_url"))

@@ -6,6 +6,8 @@ into /root/reference."""
 from __future__ import annotations
 
 import datetime as dt
+import threading
+import time
 from decimal import Decimal
 
 import pytest
@@ -102,6 +104,33 @@ def test_time_dim_distinct_timestamps(star):
     assert (r["hour"], r["day"], r["week"], r["month"], r["year"]) == (15, 31, 44, 10, 2018)
 
 
+def test_time_dim_matches_tuple_distinct(spark):
+    """build_time deduplicates ts before it derives the date parts; its rows
+    equal the reference's DISTINCT over the projected tuple
+    (sql_queries.py:180-189), duplicate and NULL ts included."""
+    from pyspark.sql import functions as F
+
+    from etl_s3_to_redshift_spark.operators.relational import date_parts
+
+    t0 = dt.datetime(2018, 10, 31, 15, 33, 20)
+    year_end = dt.datetime(2018, 12, 31, 23, 59, 59)  # ISO week 1 of 2019
+    events = spark.createDataFrame(
+        [(t0,), (t0,), (None,), (None,), (year_end,), (year_end,),
+         (t0 + dt.timedelta(hours=1),)],
+        "ts timestamp",
+    )
+    parts = date_parts("ts")
+    tuple_distinct = events.select(
+        F.col("ts").alias("start_time"),
+        *[parts[p].alias(p) for p in ("hour", "day", "week", "month", "year")],
+    ).distinct()
+    got = SS.build_time(events)
+    assert got.schema == tuple_distinct.schema
+    rows = sorted(got.collect(), key=repr)
+    assert rows == sorted(tuple_distinct.collect(), key=repr)
+    assert len(rows) == 4
+
+
 def test_csv_source_roundtrip(spark, tmp_path):
     """CSV source: explicit schema, ''→NULL, malformed→NULL (PERMISSIVE)."""
     from pyspark.sql import types as T
@@ -139,6 +168,51 @@ def test_full_pipeline_roundtrip(spark, tmp_path):
         "artists": EXPECT["artists_rows"],
         "time": EXPECT["time_rows"],
     }
+
+
+def test_pipeline_writes_inherit_job_group(spark, tmp_path):
+    """Every table is written from its own thread, which inherits the
+    caller's local properties: the writes' jobs stay in the caller's job
+    group, where cancelJobGroup and per-group metrics find them."""
+    sc = spark.sparkContext
+    events_path, songs_path = write_fixtures(tmp_path)
+    group = f"star-schema-{tmp_path.name}"
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    sc.setJobGroup(group, "run_pipeline writes")
+    try:
+        SS.run_pipeline(spark, events_path, songs_path, str(tmp_path / "warehouse"))
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 5
+
+
+def test_pipeline_fails_fast_after_all_writes(spark, tmp_path, monkeypatch):
+    """A failed write is raised only once every write has ended, no writer
+    thread outlives the call, and the first failure in insert order wins
+    even when a later table fails first."""
+    events_path, songs_path = write_fixtures(tmp_path)
+    started, written = [], []
+
+    def write_parquet(df, path, sort_key=None):
+        name = path.rsplit("/", 1)[1]
+        started.append(name)
+        if name == "songs":
+            time.sleep(0.2)
+            raise RuntimeError("songs write failed")
+        if name == "time":
+            raise ValueError("time write failed")
+        time.sleep(0.1)
+        written.append(name)
+
+    monkeypatch.setattr(SS, "write_parquet", write_parquet)
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="songs write failed"):
+        SS.run_pipeline(spark, events_path, songs_path, str(tmp_path / "warehouse"))
+    assert sorted(started) == sorted(SS.SORT_KEYS)
+    assert sorted(written) == ["artists", "songplay", "users"]
+    assert [t for t in threading.enumerate() if t not in before] == []
 
 
 def test_varchar_length_enforcement(spark):
