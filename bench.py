@@ -27,7 +27,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from etl_s3_to_redshift_spark.queries import REGISTRY, _load_extensions  # noqa: E402
+from etl_s3_to_redshift_spark.queries import (  # noqa: E402
+    REGISTRY,
+    _load_extensions,
+    index_cache_dir,
+)
 from etl_s3_to_redshift_spark.session import get_spark  # noqa: E402
 
 _load_extensions()
@@ -336,22 +340,12 @@ _INDEX_MARKERS = {
 def _index_cache_state(name: str, sf_dir: str) -> str | None:
     """"warm"/"cold" for saved-structure queries (None otherwise): warm
     iff every index the query rides is already published on disk."""
-    import hashlib
-    import tempfile
-
     specs = _INDEX_MARKERS.get(name)
     if specs is None:
         return None
-    key = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-    roots = {
-        "ivf": os.environ.get("SPARK_GRAFT_IVF_CACHE")
-        or os.path.join(tempfile.gettempdir(), "etl_s3_to_redshift_spark_ivf"),
-        "bm25": os.environ.get("SPARK_GRAFT_BM25_CACHE")
-        or os.path.join(tempfile.gettempdir(), "etl_s3_to_redshift_spark_bm25"),
-    }
-    for root_kind, suffix, marker in specs:
+    for kind, suffix, marker in specs:
         if not os.path.exists(
-            os.path.join(roots[root_kind], key + suffix, marker)
+            os.path.join(index_cache_dir(kind, sf_dir, suffix), marker)
         ):
             return "cold"
     return "warm"

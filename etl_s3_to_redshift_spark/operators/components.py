@@ -27,7 +27,6 @@ provide this too, but needs an external jar; this stays in-core.)
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, Window
@@ -44,6 +43,11 @@ from pyspark.storagelevel import StorageLevel
 # rounds), so trading resident memory for disk reads is the 100 TB-safe
 # default.
 _CKPT = StorageLevel.DISK_ONLY
+
+# Average symmetrized degree below which a graph is treated as chain-like
+# and starts on the bucketed regime (topology pre-signal, see
+# connected_components).
+_CC_BCAST_MIN_DEGREE = 4.0
 
 
 def _driver_union_find(edge_rows, spark, schema) -> DataFrame:
@@ -106,9 +110,9 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    broadcast_vertices_max: int | None = None,
+    broadcast_vertices_max: int = 20_000_000,
     driver_edges_max: int = 2_000_000,
-    switch_rounds: int | None = None,
+    switch_rounds: int = 4,
 ) -> DataFrame:
     """(vertex, component) for every vertex in the pair list; component =
     the minimum vertex id reachable from it.
@@ -128,11 +132,9 @@ def connected_components(
     ~2 copies resident). Size it to ~executor_heap/8: the repo's 16 g
     session absorbs the 20M default (measured 1.5× faster CC rounds at
     the sf100 ER graph's 18.75M vertices); a default 1–4 g JVM should
-    run with 1–2M. ``None`` (the default) reads the
-    ``SPARK_GRAFT_CC_BROADCAST_VERTICES`` env knob, else 20M. Above the
-    cap nothing degrades to edge re-shuffles: rounds sort-merge-join
-    the BUCKETED edge table (see below) so only the vertex-sized label
-    frame moves per round at ANY vertex count.
+    run with 1–2M. Above the cap nothing degrades to edge re-shuffles:
+    rounds sort-merge-join the BUCKETED edge table (see below) so only
+    the vertex-sized label frame moves per round at ANY vertex count.
 
     The regime choice is TOPOLOGY-ADAPTIVE, not just size-capped
     (VERDICT r9): the measured broadcast-vs-bucketed boundary is the
@@ -144,16 +146,15 @@ def connected_components(
     up front, two signals pick the regime: (a) a PRE-SIGNAL — average
     symmetrized degree (one count of the checkpointed edge frame;
     random-graph diameter ~ log n / log deg, so degree <
-    ``SPARK_GRAFT_CC_BCAST_MIN_DEGREE`` (default 4) means chain-like,
-    bucket from round 0 — the sf100 fixtures sit at ~1.8 vs ~12.5); and
-    (b) the ONLINE backstop — if labels are still changing after
-    ``switch_rounds`` rounds (default 4 — the dense ER fixture detects
-    its fixpoint at round 4, r5 measurement, so it must never pay the
-    write; env ``SPARK_GRAFT_CC_SWITCH_ROUNDS``) materialize the
-    bucketed edge table THEN and finish on sort-merge rounds. Dense
-    graphs never pay the edge-sized table write; chains pay it up front
-    instead of ~8 broadcast rebuilds. Both regimes compute identical
-    labelings (pinned result-equal in tests)."""
+    ``_CC_BCAST_MIN_DEGREE`` (4) means chain-like, bucket from round 0
+    — the sf100 fixtures sit at ~1.8 vs ~12.5); and (b) the ONLINE
+    backstop — if labels are still changing after ``switch_rounds``
+    rounds (default 4 — the dense ER fixture detects its fixpoint at
+    round 4, r5 measurement, so it must never pay the write)
+    materialize the bucketed edge table THEN and finish on sort-merge
+    rounds. Dense graphs never pay the edge-sized table write; chains
+    pay it up front instead of ~8 broadcast rebuilds. Both regimes
+    compute identical labelings (pinned result-equal in tests)."""
     # Materialize the RAW pair selection once (narrow — no shuffle):
     # every path below consumes it at least twice, and without truncation
     # each use re-runs the whole upstream pair pipeline — ruinous when
@@ -184,10 +185,6 @@ def connected_components(
             f"vertex {vt}, component {vt}",
         )
     spark = pairs.sparkSession
-    if broadcast_vertices_max is None:
-        broadcast_vertices_max = int(
-            os.environ.get("SPARK_GRAFT_CC_BROADCAST_VERTICES", 20_000_000)
-        )
     sym = (
         raw.union(raw.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
@@ -229,7 +226,7 @@ def connected_components(
     # (many rounds: every broadcast rebuild wasted) while a high-degree
     # graph is clique-like (few rounds: broadcast rounds are 1.5× faster
     # than SMJ rounds, r8). The sf100 ER fixtures sit at avg sym-degree
-    # ~1.8 (chains) vs ~12.5 (dense) — the default threshold 4 splits
+    # ~1.8 (chains) vs ~12.5 (dense) — the threshold 4 splits
     # them with margin, and the count is one scan of the already-
     # checkpointed edge frame. Pathological low-degree/low-diameter
     # graphs (hub stars) just pay the bounded bucketed-regime premium;
@@ -237,10 +234,10 @@ def connected_components(
     # below — the pre-signal is an optimization, the switch is the
     # correctness-of-cost backstop.
     avg_degree = edges.count() / n_vertices
-    degree_min = float(os.environ.get("SPARK_GRAFT_CC_BCAST_MIN_DEGREE", 4.0))
-    bcast = n_vertices <= broadcast_vertices_max and avg_degree >= degree_min
-    if switch_rounds is None:
-        switch_rounds = int(os.environ.get("SPARK_GRAFT_CC_SWITCH_ROUNDS", 4))
+    bcast = (
+        n_vertices <= broadcast_vertices_max
+        and avg_degree >= _CC_BCAST_MIN_DEGREE
+    )
     scratch_tables: list[str] = []
 
     def bucketize(e: DataFrame) -> DataFrame:

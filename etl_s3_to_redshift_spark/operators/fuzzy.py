@@ -9,8 +9,17 @@ north-star extension of that enrichment join to corrupted keys.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from etl_s3_to_redshift_spark.operators.textops import _session_spill_regime
+
+# Spill-regime star-exchange sizing: ~128 MB of row bytes per window sort
+# task (guide §2.2), and a ceiling on the derived partition count.
+_STAR_PARTITION_BYTES = 128 * 1024 * 1024
+_STAR_PARTITIONS_MAX = 4096
 
 
 def _segment_bounds(n_segments: int) -> list[tuple[str, str]]:
@@ -22,23 +31,6 @@ def _segment_bounds(n_segments: int) -> list[tuple[str, str]]:
         end = f"cast(floor(length(__s) * {i + 1} / {n_segments}) as int)"
         bounds.append((start, f"({end}) - ({start}) + 1"))
     return bounds
-
-
-def _star_sizing_enabled(spark) -> bool:
-    """Scale-adaptive star-exchange sizing runs only in spill-regime
-    sessions (shuffle partitions ≥ 96 — the deployment-scale knob, same
-    signal the r9 bigram materialization keyed on): below it the sort
-    fits memory and the sizing's count job would be pure overhead.
-    ``SPARK_GRAFT_STAR_SIZING=off`` force-disables (A/B hook)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_STAR_SIZING", "auto") == "off":
-        return False
-    from etl_s3_to_redshift_spark.operators.textops import (
-        _session_spill_regime,
-    )
-
-    return _session_spill_regime(spark)
 
 
 def blocked_substitution_join(
@@ -179,10 +171,7 @@ def substitution_clique_components(
     scale knob) the block-min window's exchange is re-sized from the
     input (guide §2.2: ~128 MB of row bytes per sort task) so the
     exact-key sort stays in memory instead of spilling — result-
-    identical, plan-identical below the knob. A singleton PREFILTER
-    experiment is also kept behind ``SPARK_GRAFT_STAR_PREFILTER=on``;
-    it measured NEGATIVE on this box (see inline comments) and defaults
-    off.
+    identical, plan-identical below the knob.
     """
     from etl_s3_to_redshift_spark.operators.components import connected_components
 
@@ -246,68 +235,14 @@ def _star_frame(
         # about which rows share a block — only sort-comparison order.
         .withColumn("__ch", F.xxhash64("__seg", "__comp", "__slen"))
     )
-    # Singleton prefilter (round 11, guide §2.3 — shuffle a lightweight
-    # proxy, move wide rows only when they matter): singleton blocks
-    # produce NO star edge, and on sparse/chain topologies they are
-    # ~96% of the exploded rows (sf100: 840M rows, ~33M in multi-member
-    # blocks), yet the block-min window sorts EVERY wide
-    # (__seg, __comp, __slen) row — a ~45 GB spill-bound external sort,
-    # the r9/r10 sf100 wall. Instead: (1) one NARROW pass aggregates
-    # block sizes on the 8-byte block hash (hash aggregation, no wide
-    # sort); (2) rows whose hash has ≥2 members survive a broadcast
-    # semi-filter; (3) the exact-key window runs on the survivors only.
-    # EXACT by construction: equal triples hash equal, so every true
-    # multi-member block survives whole; a hash collision can only KEEP
-    # extra singleton rows, and the window still partitions by the exact
-    # triple, so those rows yield __id == __bmin and are filtered — the
-    # no-silent-merge guarantee of the string key is untouched (this is
-    # why the VERDICT-r10 "dictionary-encode via broadcast dim" idea was
-    # NOT taken: distinct complements ≈ exploded rows on sparse graphs —
-    # ~800M at sf100 — far over the broadcast cap, and an exact dim
-    # would need the very string shuffle being avoided).
-    #
-    # Singleton-prefilter experiment (r11) — MEASURED NEGATIVE, default
-    # OFF. The idea (aggregate block sizes on the 8-byte hash, broadcast
-    # the multi-member hashes, window only survivors — exact, since the
-    # window still partitions by the exact triple and collisions can
-    # only RETAIN rows) loses on this box at every SF measured: sf10
-    # star-only 38.5 s direct vs 54.3 s prefiltered, sf100 full query
-    # 715.3 s vs 1003.6 s (tools/er_prefilter_ab.py, same-session,
-    # 128 partitions). Counting ~830M nearly-unique hashes has nothing
-    # to map-side combine, so the "narrow" histogram degenerates to a
-    # sort-spill of its own — paid twice (gate stats + candidate build)
-    # plus a ~15M-row broadcast. Kept behind
-    # ``SPARK_GRAFT_STAR_PREFILTER=on`` (result-equality pinned in
-    # tests) so the experiment stays reproducible; a network-bound
-    # cluster, where shuffle BYTES not local sort I/O dominate, may
-    # re-run it and decide differently.
-    import math
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_STAR_PREFILTER", "off")
-    gate_frac = float(os.environ.get("SPARK_GRAFT_STAR_PREFILTER_FRAC", 0.5))
-    bcast_max = int(
-        os.environ.get("SPARK_GRAFT_STAR_PREFILTER_BCAST_MAX", 64_000_000)
-    )
-    use_prefilter = False
-    block_sizes = exploded.groupBy("__ch").agg(F.count(F.lit(1)).alias("__n"))
-    if mode == "on":
-        stats = block_sizes.agg(
-            F.sum("__n").alias("total"),
-            F.sum(F.when(F.col("__n") >= 2, F.col("__n"))).alias("surv"),
-            F.count_if(F.col("__n") >= 2).alias("n_multi"),
-        ).first()
-        total = int(stats["total"] or 0)
-        surv = int(stats["surv"] or 0)
-        n_multi = int(stats["n_multi"] or 0)
-        use_prefilter = (
-            total > 0 and surv <= gate_frac * total and n_multi <= bcast_max
-        )
-    source = exploded
-    if use_prefilter:
-        cand = block_sizes.filter(F.col("__n") >= 2).select("__ch")
-        source = exploded.join(F.broadcast(cand), "__ch")
-    elif _star_sizing_enabled(records.sparkSession):
+    # A singleton prefilter (aggregate block sizes on the 8-byte hash,
+    # broadcast the multi-member hashes, window only the survivors) was
+    # measured NEGATIVE here and deleted: sf10 star-only 38.5 s direct vs
+    # 54.3 s prefiltered, sf100 full query 715.3 s vs 1003.6 s
+    # (tools/logs/er_prefilter_ab_sf100_sparse.log, OPTIMIZATION_r11 §1).
+    # Counting ~830M nearly-unique hashes has nothing to map-side
+    # combine, so the histogram degenerates to a sort-spill of its own.
+    if _session_spill_regime(records.sparkSession):
         # Scale-adaptive star-exchange sizing (r11, guide §2.2 — size
         # shuffle partitions so the window's external sort stays in
         # memory, ~100–128 MB of row bytes per task, instead of a
@@ -316,31 +251,30 @@ def _star_frame(
         # per task and spills (GCLocker retry warnings all over the
         # log); re-deriving the count from the input size measured
         # star-only 421 → 363 s (ABBA means, same session —
-        # tools/er_star_partitions_ab.py). Spill-regime sessions only:
-        # local runs (partitions = cores) skip the extra count job and
-        # keep the r10 plan byte-identical. Only ever RAISES the
-        # session's partition count — a deployment that already sized
-        # partitions generously is respected. The explicit repartition
-        # carries the window's exact partition keys, so the window adds
-        # no second exchange on top of it.
+        # tools/logs/er_star_partitions_sf100.log; full query
+        # tools/logs/er_star_sizing_sf100.log). Spill-regime sessions
+        # only (shuffle partitions ≥ 96): local runs (partitions =
+        # cores) skip the extra count job and keep the r10 plan
+        # byte-identical. Only ever RAISES the session's partition
+        # count — a deployment that already sized partitions generously
+        # is respected. The explicit repartition carries the window's
+        # exact partition keys, so the window adds no second exchange
+        # on top of it.
         n_rows = records.count() * int(n_segments)
         # unsafe-row footprint: ~48 B fixed (null bitmap, id, seg,
         # slen, hash, string offsets) + the complement bytes (≤ slen ≤
         # n_segments)
         est_bytes = n_rows * (48 + int(n_segments))
-        target = int(
-            os.environ.get("SPARK_GRAFT_STAR_PARTITION_BYTES", 128 * 1024 * 1024)
+        # an int: the spill-regime check above already parsed it
+        cur = int(records.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        n_parts = min(
+            _STAR_PARTITIONS_MAX,
+            max(1, math.ceil(est_bytes / _STAR_PARTITION_BYTES)),
         )
-        cap = int(os.environ.get("SPARK_GRAFT_STAR_PARTITIONS_MAX", 4096))
-        try:
-            cur = int(records.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            cur = 0
-        n_parts = min(cap, max(1, math.ceil(est_bytes / max(target, 1))))
         if n_parts > cur:
-            source = source.repartition(n_parts, "__ch", "__seg", "__comp", "__slen")
+            exploded = exploded.repartition(n_parts, "__ch", "__seg", "__comp", "__slen")
     w = Window.partitionBy("__ch", "__seg", "__comp", "__slen")
     return (
-        source.select("__id", F.min("__id").over(w).alias("__bmin"))
+        exploded.select("__id", F.min("__id").over(w).alias("__bmin"))
         .filter(F.col("__id") != F.col("__bmin"))
     )

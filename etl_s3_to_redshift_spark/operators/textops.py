@@ -606,10 +606,10 @@ def bigram_logprob_scores(
     its scan partition before the docs-sized exchange. The r9
     spill-regime-gated DISK_ONLY checkpoint of tf existed to avoid
     re-tokenizing the corpus for the second consumer; with no
-    corpus-sized shuffle left, two in-scan tokenize passes are cheaper
-    than materializing a near-corpus-sized frame to disk at every SF
-    measured (sf1/sf10/sf100 A/B in OPTIMIZATION_r11.md), so the gate
-    is gone. ``vocab_size``: passing it pins V as a literal; None
+    corpus-sized shuffle left, two in-scan tokenize passes are expected
+    to be cheaper than materializing a near-corpus-sized frame to disk,
+    so the gate is gone (an sf1/sf10/sf100 A/B of that choice is not
+    recorded). ``vocab_size``: passing it pins V as a literal; None
     derives it in-plan (same exact integer).
     """
     arr = F.filter(

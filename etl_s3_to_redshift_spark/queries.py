@@ -18,6 +18,9 @@ order-insensitive value-hash matches):
 
 from __future__ import annotations
 
+import hashlib
+import os
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -58,6 +61,20 @@ def register(name: str, oracle: str | None, doc: str = "", oracle_sf: str | None
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
+
+
+def index_cache_dir(kind: str, sf_dir: str, suffix: str = "") -> str:
+    """Directory of a lake's saved index (``kind`` "ivf" or "bm25"): one
+    subdirectory per lake, named by the first 16 hex digits of the sha1
+    of the lake's absolute path, plus ``suffix``. The root is the
+    ``SPARK_GRAFT_IVF_CACHE`` / ``SPARK_GRAFT_BM25_CACHE`` deployment
+    path, else a directory under the system temp dir. The only
+    environment read in the package outside session.py."""
+    root = os.environ.get(f"SPARK_GRAFT_{kind.upper()}_CACHE") or os.path.join(
+        tempfile.gettempdir(), f"etl_s3_to_redshift_spark_{kind}"
+    )
+    key = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
+    return os.path.join(root, key + suffix)
 
 
 # ===========================================================================

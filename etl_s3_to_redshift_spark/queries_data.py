@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_s3_to_redshift_spark.queries import _t, register
+from etl_s3_to_redshift_spark.queries import _t, index_cache_dir, register
 
 # ---------------------------------------------------------------------------
 # Shared SQL fragments (DuckDB dialect) mirroring functions/text.py
@@ -121,17 +121,11 @@ def _staged_minhash_path(spark: SparkSession, sf_dir: str) -> str:
     index: Spark's _SUCCESS marker gates reuse, a torn write rebuilds.
     The local lakes are immutable; point SPARK_GRAFT_IVF_CACHE at a
     fresh root if yours isn't."""
-    import hashlib
     import os
-    import tempfile
 
     from etl_s3_to_redshift_spark.operators.dedup import stage_minhash
 
-    root = os.environ.get("SPARK_GRAFT_IVF_CACHE") or os.path.join(
-        tempfile.gettempdir(), "etl_s3_to_redshift_spark_ivf"
-    )
-    key = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-    base = os.path.join(root, key + "_minhash")
+    base = index_cache_dir("ivf", sf_dir, "_minhash")
     if not os.path.exists(os.path.join(base, "_SUCCESS")):
         stage_minhash(_t(spark, sf_dir, "documents"), base, num_hashes=32)
     return base

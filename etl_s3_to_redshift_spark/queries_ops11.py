@@ -9,14 +9,12 @@ three queries carry exact DuckDB oracles.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_s3_to_redshift_spark.queries import _t, register
+from etl_s3_to_redshift_spark.queries import _t, index_cache_dir, register
 
 _WORDS_LOWER_SQL = (
     r"list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x != '')"
@@ -584,11 +582,7 @@ def _saved_ivf_index(spark: SparkSession, sf_dir: str):
     )
     from etl_s3_to_redshift_spark.operators.table_commit import SnapshotIndex
 
-    root = os.environ.get("SPARK_GRAFT_IVF_CACHE") or os.path.join(
-        tempfile.gettempdir(), "etl_s3_to_redshift_spark_ivf"
-    )
-    key = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-    base = os.path.join(root, key)
+    base = index_cache_dir("ivf", sf_dir)
     # resident-index memo (per Spark app — a loaded handle binds its
     # cells DataFrame to the session): a serving system keeps the
     # quantizer loaded across query batches, so repeat probes in one
@@ -815,11 +809,7 @@ def _saved_ivf_index_appended(spark: SparkSession, sf_dir: str):
         build_ivf_index,
     )
 
-    root = os.environ.get("SPARK_GRAFT_IVF_CACHE") or os.path.join(
-        tempfile.gettempdir(), "etl_s3_to_redshift_spark_ivf"
-    )
-    key = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-    base = os.path.join(root, key + "_appended")
+    base = index_cache_dir("ivf", sf_dir, "_appended")
     memo_key = (spark.sparkContext.applicationId, base)
     idx = _IVF_MEMO.get(memo_key)
     if idx is not None:
@@ -955,11 +945,7 @@ def _saved_bm25_path(spark: SparkSession, sf_dir: str) -> str:
     from etl_s3_to_redshift_spark.operators.table_commit import SnapshotIndex
     from etl_s3_to_redshift_spark.operators.textops import stage_bm25
 
-    root = os.environ.get("SPARK_GRAFT_BM25_CACHE") or os.path.join(
-        tempfile.gettempdir(), "etl_s3_to_redshift_spark_bm25"
-    )
-    key = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-    base = os.path.join(root, key)
+    base = index_cache_dir("bm25", sf_dir)
     if not SnapshotIndex(base).exists():
         stage_bm25(_t(spark, sf_dir, "documents"), base)
     return base
@@ -1068,11 +1054,7 @@ def _saved_bm25_path_appended(spark: SparkSession, sf_dir: str) -> str:
         stage_bm25,
     )
 
-    root = os.environ.get("SPARK_GRAFT_BM25_CACHE") or os.path.join(
-        tempfile.gettempdir(), "etl_s3_to_redshift_spark_bm25"
-    )
-    key = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-    base = os.path.join(root, key + "_appended")
+    base = index_cache_dir("bm25", sf_dir, "_appended")
     marker = os.path.join(base, "_APPEND_DONE")
     if not os.path.exists(marker):
         docs = _t(spark, sf_dir, "documents")

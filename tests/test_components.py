@@ -9,6 +9,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from etl_s3_to_redshift_spark.operators import components
 from etl_s3_to_redshift_spark.operators.components import connected_components, dedup_groups
 from etl_s3_to_redshift_spark.operators.dedup import jaccard_pairs
 from etl_s3_to_redshift_spark.sources.tables import load_table
@@ -92,12 +93,11 @@ def test_components_raises_on_nonconvergence(spark):
     assert set(got.values()) == {0}
 
 
-def test_components_beyond_broadcast_cap_result_equal(spark, monkeypatch):
+def test_components_beyond_broadcast_cap_result_equal(spark):
     """The >cap regime — sort-merge rounds against the bucketed edge
     layout, labels shuffling, edges never — must be result-identical to
     the label-broadcast regime (VERDICT r7 #7: the cap is a tunable
-    memory bet, so BOTH sides of it need the same answer). Also pins
-    the SPARK_GRAFT_CC_BROADCAST_VERTICES env knob as the cap source."""
+    memory bet, so BOTH sides of it need the same answer)."""
     rng = random.Random(99)
     edges = list({tuple(sorted(rng.sample(range(80), 2))) for _ in range(150)})
     df = spark.createDataFrame(edges, "id_a long, id_b long")
@@ -116,13 +116,6 @@ def test_components_beyond_broadcast_cap_result_equal(spark, monkeypatch):
         ).collect()
     }
     assert under_cap == want
-    # env knob: default None reads SPARK_GRAFT_CC_BROADCAST_VERTICES
-    monkeypatch.setenv("SPARK_GRAFT_CC_BROADCAST_VERTICES", "0")
-    via_env = {
-        r.vertex: r.component
-        for r in connected_components(df, driver_edges_max=0).collect()
-    }
-    assert via_env == want
 
 
 def test_cc_edge_layout_elides_per_round_exchange(spark):
@@ -176,7 +169,7 @@ def test_components_topology_adaptive_switch_result_equal(spark, monkeypatch):
     want = union_find(chain)
     # a chain's avg degree (<4) triggers the bucketed pre-signal; force
     # the broadcast start here so the ONLINE switch itself is exercised
-    monkeypatch.setenv("SPARK_GRAFT_CC_BCAST_MIN_DEGREE", "0")
+    monkeypatch.setattr(components, "_CC_BCAST_MIN_DEGREE", 0.0)
     switched = {
         r.vertex: r.component
         for r in connected_components(
@@ -190,19 +183,9 @@ def test_components_topology_adaptive_switch_result_equal(spark, monkeypatch):
         ).collect()
     }
     assert switched == stay_bcast == want
-    # default None reads the SPARK_GRAFT_CC_SWITCH_ROUNDS env knob
-    monkeypatch.setenv("SPARK_GRAFT_CC_SWITCH_ROUNDS", "1")
-    via_env = {
-        r.vertex: r.component
-        for r in connected_components(
-            df, driver_edges_max=0, max_iter=40
-        ).collect()
-    }
-    assert via_env == want
-    # and the degree PRE-SIGNAL path (default env): chain-like degree
-    # buckets from round 0, result-identical
-    monkeypatch.delenv("SPARK_GRAFT_CC_BCAST_MIN_DEGREE")
-    monkeypatch.delenv("SPARK_GRAFT_CC_SWITCH_ROUNDS")
+    # and the degree PRE-SIGNAL path (default threshold): chain-like
+    # degree buckets from round 0, result-identical
+    monkeypatch.undo()
     pre = {
         r.vertex: r.component
         for r in connected_components(

@@ -600,50 +600,6 @@ def test_substitution_clique_components_deep_chain(spark):
     assert got == want
 
 
-def test_star_prefilter_regimes_result_equal(spark, monkeypatch):
-    """The r11 singleton prefilter (narrow block-hash histogram +
-    broadcast semi-filter before the exact-key window) must be
-    result-equal to the direct window on BOTH topologies: chain-like
-    (most blocks singleton — the prefilter's target) and clique-like
-    (most rows survive — the gate's fallback). 'on' runs the topology
-    gate; FRAC=1.0 forces the prefilter branch outright; 'off' pins the
-    r10 direct path. Also pins the broadcast-cap fallback: a cap of 0
-    must fall back to direct even when forced on."""
-    from etl_s3_to_redshift_spark.operators.fuzzy import (
-        substitution_clique_components,
-    )
-
-    chain = ["aaaa", "aaab", "aabb", "abbb", "bbbb", "bbbc", "bbcc"]
-    clique = ["cccc", "cccd", "ccce", "cccf"]  # one block, all pairwise
-    rows = (
-        [(100 - i, s) for i, s in enumerate(chain)]
-        + [(200 + i, s) for i, s in enumerate(clique)]
-        + [(1, "zzzz")]
-    )
-    df = spark.createDataFrame(rows, "rec_id long, name string")
-
-    def run():
-        return {
-            (r.vertex, r.component)
-            for r in substitution_clique_components(
-                df, "rec_id", "name", n_segments=4
-            ).collect()
-        }
-
-    monkeypatch.setenv("SPARK_GRAFT_STAR_PREFILTER", "off")
-    direct = run()
-    monkeypatch.setenv("SPARK_GRAFT_STAR_PREFILTER", "on")
-    gated = run()
-    monkeypatch.setenv("SPARK_GRAFT_STAR_PREFILTER_FRAC", "1.0")
-    forced = run()
-    monkeypatch.setenv("SPARK_GRAFT_STAR_PREFILTER_BCAST_MAX", "0")
-    capped = run()
-    assert direct == gated == forced == capped
-    ids = [100 - i for i in range(len(chain))]
-    assert {(v, min(ids)) for v in ids} <= direct
-    assert {(200 + i, 200) for i in range(len(clique))} <= direct
-
-
 def test_star_sizing_raises_window_partitions_in_spill_regime(spark, monkeypatch):
     """In spill-regime sessions the star window's exchange is re-sized
     from the input (guide §2.2): with a 1-byte target the derived count
@@ -651,6 +607,7 @@ def test_star_sizing_raises_window_partitions_in_spill_regime(spark, monkeypatch
     no second exchange is added), and rows are identical to the unsized
     plan. Below the spill knob (local core counts) the plan must NOT
     carry the explicit repartition."""
+    from etl_s3_to_redshift_spark.operators import fuzzy
     from etl_s3_to_redshift_spark.operators.fuzzy import (
         _star_frame,
         substitution_clique_components,
@@ -675,8 +632,8 @@ def test_star_sizing_raises_window_partitions_in_spill_regime(spark, monkeypatch
             _star_frame(df, "rec_id", "name", 4), materialize=False
         )
         spark.conf.set("spark.sql.shuffle.partitions", "128")
-        monkeypatch.setenv("SPARK_GRAFT_STAR_PARTITION_BYTES", "1")
-        monkeypatch.setenv("SPARK_GRAFT_STAR_PARTITIONS_MAX", "131")
+        monkeypatch.setattr(fuzzy, "_STAR_PARTITION_BYTES", 1)
+        monkeypatch.setattr(fuzzy, "_STAR_PARTITIONS_MAX", 131)
         plan_sized = executed_plan_of(
             _star_frame(df, "rec_id", "name", 4), materialize=False
         )

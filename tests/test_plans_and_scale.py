@@ -21,6 +21,13 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+@pytest.fixture(scope="module")
+def registry_plans(spark) -> dict[str, str]:
+    """{name: plan} of every registered query at SF_SMOKE under the
+    default session conf, built once for the whole-registry audits."""
+    return {name: plan_of(spec.spark(spark, SF_SMOKE)) for name, spec in REGISTRY.items()}
+
+
 def executed_plan_of(df, materialize: bool = True) -> str:
     """Final (post-AQE) physical plan — the authoritative shape for
     pins that depend on runtime decisions (ReusedExchange, AQE join
@@ -131,12 +138,11 @@ ALLOWED_BNL = {
 }
 
 
-def test_no_cartesian_products_anywhere(spark):
+def test_no_cartesian_products_anywhere(registry_plans):
     """No registered query may plan a CartesianProduct; the only
     broadcast-nested-loops allowed are the ALLOWED_BNL entries (each a
     deliberate bounded-build scan or 1-row scalar broadcast)."""
-    for name, spec in REGISTRY.items():
-        plan = plan_of(spec.spark(spark, SF_SMOKE))
+    for name, plan in registry_plans.items():
         assert "CartesianProduct" not in plan, name
         if name not in ALLOWED_BNL:
             assert "BroadcastNestedLoopJoin" not in plan, name
@@ -436,7 +442,7 @@ def _global_windows(plan: str) -> list[str]:
     return hits
 
 
-def test_no_unpartitioned_windows_outside_allowlist(spark):
+def test_no_unpartitioned_windows_outside_allowlist(registry_plans):
     """Mechanized bounded-window audit (VERDICT r5 item 8): an
     unpartitioned ``Window.orderBy`` is the classic scale-killer — the
     FULL input crosses one Exchange SinglePartition into one task. The
@@ -447,8 +453,7 @@ def test_no_unpartitioned_windows_outside_allowlist(spark):
     counts, top-k limits), never by the row count. A future query adding
     an unbounded global window fails here by name."""
     flagged = {}
-    for name, spec in REGISTRY.items():
-        plan = plan_of(spec.spark(spark, SF_SMOKE))
+    for name, plan in registry_plans.items():
         hits = _global_windows(plan)
         if hits and name not in ALLOWED_GLOBAL_WINDOW:
             flagged[name] = hits
@@ -473,7 +478,7 @@ ALLOWED_GLOBAL_WINDOW = {
 }
 
 
-def test_allowlist_entries_are_live(spark):
+def test_allowlist_entries_are_live(registry_plans):
     """Every allowlist entry must still match a LIVE plan (VERDICT r8
     #7): an entry whose query is gone, or whose plan no longer contains
     the allowed construct at the audit SF, is dead weight that would
@@ -485,14 +490,14 @@ def test_allowlist_entries_are_live(spark):
         if name not in REGISTRY:
             dead.append((name, "not in REGISTRY", why))
             continue
-        plan = plan_of(REGISTRY[name].spark(spark, SF_SMOKE))
+        plan = registry_plans[name]
         if "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan:
             dead.append((name, "plans no BroadcastNestedLoopJoin", why))
     for name, why in ALLOWED_GLOBAL_WINDOW.items():
         if name not in REGISTRY:
             dead.append((name, "not in REGISTRY", why))
             continue
-        plan = plan_of(REGISTRY[name].spark(spark, SF_SMOKE))
+        plan = registry_plans[name]
         if not _global_windows(plan):
             dead.append((name, "plans no global Window", why))
     assert not dead, f"dead allowlist entries — remove them: {dead}"
