@@ -255,6 +255,8 @@ DATA_BOUND = [
     "text_bpe_tokenize",
     # round-6: end-to-end ER via clique-contraction blocking + CC
     "entity_groups_fuzzy",
+    # the chain-shaped ER graph: the sf100 wall query (VERDICT r11 #3)
+    "entity_groups_sparse_chain",
     # round-6 additions: DSIR weights and trigram novelty are corpus-
     # scan text ops; hard-negative mining streams the corpus per query;
     # SemDeDup shuffles the corpus once into per-cluster gram kernels

@@ -1455,12 +1455,16 @@ def dedup_lines_keepfirst(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vector, repeatedly add the point farthest from the selected "
         "set (k=16), and emit every point's nearest-center assignment "
         "and distance — the diversity sample plus the per-example "
-        "novelty signal. Iterative state is one (id, mindist, nearest) "
-        "frame: each round is one TakeOrderedAndProject of a single "
-        "row, one narrow JVM update against the new center literal, "
-        "and a lineage-truncating checkpoint — k bounded one-row "
-        "driver round-trips, the BPE/PageRank iteration budget. "
-        "Distances rounded before every compare; dirty rows never "
+        "novelty signal. Two regimes pick the same centers: at or "
+        "under 200k rows the (id, vec) projection is collected once "
+        "and farthest-first runs on the driver in numpy with Spark's "
+        "own fold, sqrt and HALF_UP rounding (one job); above it, or "
+        "for NaN/Inf elements and NULL or non-integral/string ids, each "
+        "of the k-1 rounds is one TakeOrderedAndProject of a single "
+        "row over the cached projection, mindist recomputed as a "
+        "least() over the center-literal folds. The returned frame is "
+        "the same lazy Spark expression over the chosen centers either "
+        "way. Distances rounded before every compare; dirty rows never "
         "selectable, always emitted with NULL assignment."
     ),
     oracle_sf="sf0.01",

@@ -65,8 +65,9 @@ MATRIX_QUERIES = [
     "emb_prototypes_prune",
     "dedup_exact_substrings",
     # round-6 fourth batch: the token budget rides exact-DECIMAL div/mod
-    # under ANSI; k-center is the checkpointed-iteration class (every
-    # round re-reads the pinned frame — the exchange-reuse bug family)
+    # under ANSI; k-center picks its centers on the driver and emits a
+    # lazy Spark frame over them (size(NULL) and rounding must agree
+    # between the two under every variant)
     "data_token_budget",
     "emb_kcenter_coreset",
     # round-6 fifth batch: BM25's decimal score sums ride double/decimal

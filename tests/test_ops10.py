@@ -632,12 +632,16 @@ def test_kcenter_dirty_rows_never_selected(spark):
             assert got[dirty]["center_rank"] is None
 
 
-def test_kcenter_regimes_bit_identical_over_the_bound(spark):
-    """The incremental (cached-mindist-column) and recompute-from-centers
-    regimes split on ``incremental_rows_max`` but compute the same
-    least() fold — the outputs must be row-for-row identical, doubles
-    included, so the committed pin holds whichever side of the bound a
-    deployment lands on (VERDICT r7 #5)."""
+def test_kcenter_regimes_bit_identical_over_the_bound(spark, monkeypatch):
+    """The driver (numpy farthest-first) and recompute (Spark rounds)
+    regimes split on ``incremental_rows_max`` but must pick the same
+    centers in the same rank order — the outputs must be row-for-row
+    identical, doubles included, so the committed pin holds whichever
+    side of the bound a deployment lands on (VERDICT r7 #5). Adversarial
+    frames cover dirty rows, the early stop, rounded-distance ties, k
+    past the distinct points, k=1, an all-dirty corpus and string ids;
+    NaN/Inf elements and NULL ids must keep the Spark regime."""
+    from etl_s3_to_redshift_spark.operators import similarity
     from etl_s3_to_redshift_spark.operators.similarity import kcenter_coreset
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -647,6 +651,110 @@ def test_kcenter_regimes_bit_identical_over_the_bound(spark):
         for r in kcenter_coreset(emb, k=8, incremental_rows_max=0).collect()
     )
     assert inc == rec and len(inc) == 500
+
+    picks = []
+    driver = similarity._kcenter_farthest_first
+
+    def spy(*args):
+        picks.append(driver(*args))
+        return picks[-1]
+
+    monkeypatch.setattr(similarity, "_kcenter_farthest_first", spy)
+
+    def both(rows, k, schema="vec_id long, embedding array<double>"):
+        df = spark.createDataFrame(rows, schema)
+        picks.clear()
+        got = [kcenter_coreset(df, k=k), kcenter_coreset(df, k=k, incremental_rows_max=0)]
+        drv, rec = (sorted(repr(tuple(r)) for r in g.collect()) for g in got)
+        assert drv == rec and len(drv) == len(rows), (rows, k, drv, rec)
+        return picks[0]
+
+    mixed = [
+        (0, [0.0, 0.0, 0.0]),  # seed
+        (1, None),
+        (2, [1.0]),  # ragged
+        (3, [1.0, None, 0.0]),  # NULL element: dirty, never selectable
+        (4, [3.0, 4.0, 0.0]),  # 4, 5, 6 and 8 all round to 5.0: id 4 wins
+        (5, [0.0, 0.0, 5.0]),
+        (6, [0.0, 3.0000001, 4.0]),
+        (7, [3.0, 4.0, 0.0]),  # duplicate of 4
+        (8, [-5.0, 0.0, 0.0]),
+        (9, []),
+    ]
+    for k in (1, 7):  # 7 > the 5 distinct clean points: early stop
+        assert len(both(mixed, k)) == min(k, 5)
+    assert len(both([(i, [1.0, 2.0]) for i in range(4)], 3)) == 1  # identical
+    assert both([(0, None), (1, [])], 3) == []  # all dirty
+    strs = [
+        ("b", [0.0, 0.0]),
+        ("a", [1.0, 1.0]),
+        ("\u00e4", [2.0, 0.0]),
+        ("Z", [0.0, 2.0]),
+        ("10", [1.0, -1.0]),
+        ("9", [-1.0, 1.0]),
+    ]
+    centers = both(strs, 3, "vec_id string, embedding array<double>")
+    assert centers[0][0] == "10"  # binary string order, as Spark sorts
+    for rows in (
+        [(0, [0.0, 0.0]), (1, [float("nan"), 1.0])],
+        [(0, [0.0, 0.0]), (1, [float("-inf"), 1.0])],
+        [(None, [0.0, 0.0]), (1, [1.0, 1.0])],
+    ):
+        picks.clear()
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        kcenter_coreset(df, k=2).collect()
+        assert picks == [None], rows  # the Spark regime ran
+
+
+def test_round_half_up_matches_spark_round(spark):
+    """The driver regime's HALF_UP helper equals Spark's ``round(x, 6)``
+    bit for bit: half-grid doubles at three magnitudes (where the
+    decimal string Spark rounds and the binary value disagree), their
+    float neighbours, random distances and 0.0."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from etl_s3_to_redshift_spark.operators.similarity import _round_half_up
+
+    halves = np.concatenate(
+        [(np.arange(lo, lo + 200) + 0.5) * 1e-6 for lo in (0, 10**6 - 100, 10**9 - 100)]
+    )
+    xs = np.concatenate(
+        [
+            halves,
+            np.nextafter(halves, -np.inf),
+            np.nextafter(halves, np.inf),
+            np.sqrt(np.random.default_rng(7).uniform(0.0, 16.0, 10_000)),
+            [0.0],
+        ]
+    )
+    df = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(xs)), "x": xs}))
+    want = (
+        df.select("i", F.round("x", 6).alias("r")).toPandas().sort_values("i")["r"]
+    ).to_numpy()
+    got = _round_half_up(xs, 6, spark)
+    assert got.view(np.int64).tolist() == want.view(np.int64).tolist()
+
+
+def test_kcenter_small_input_builds_in_one_job(spark):
+    """Under the row bound all k centers come from ONE collected job —
+    not one Spark round per center — and the returned frame is lazy."""
+    from etl_s3_to_redshift_spark.operators.similarity import kcenter_coreset
+
+    from tests.conftest import SF_ORACLE
+
+    sc = spark.sparkContext
+    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
+    group = "kcenter-small-input-build"
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    sc.setJobGroup(group, "kcenter_coreset build")
+    try:
+        kcenter_coreset(emb, k=16)
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
 
 
 def test_kcenter_releases_every_cache_block(spark):
