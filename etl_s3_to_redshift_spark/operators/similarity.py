@@ -18,7 +18,6 @@ At 100 TB the LSH path turns the scan into an equi-join on bucket keys.
 
 from __future__ import annotations
 
-import math
 from decimal import ROUND_HALF_UP, Context, Decimal
 
 import numpy as np
@@ -114,6 +113,11 @@ def _tie_safe_top_idx(col: "np.ndarray", k: int, round_to: int | None) -> "np.nd
 
 
 _ARROW_ID_TYPES = ("tinyint", "smallint", "int", "bigint", "string")
+
+# kcenter_coreset's driver regime collects at most this many bytes of
+# (id, vec) projection: 200k rows at dim 64, well inside the default
+# spark.driver.maxResultSize (1g) and a default driver heap
+_KCENTER_COLLECT_BYTES_MAX = 128 << 20
 
 
 def _arrow_id_type(df: DataFrame, col: str) -> str:
@@ -538,6 +542,7 @@ class IvfIndex:
         SQL expression in the consuming frame; a plain identifier is
         backtick-quoted here (protects reserved-word column names —
         names needing more exotic quoting must arrive pre-backticked)."""
+        import math
         import re
 
         if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", vec_sql):
@@ -1977,6 +1982,8 @@ def _auto_band_bits(n_side: int, target_bucket_rows: int = 1000) -> int:
     (per-bucket pair work pinned ~target², the SemDeDup-K rule applied
     to banding), floored at 4 so small corpora keep the pinned-oracle
     geometry."""
+    import math
+
     return max(4, math.ceil(math.log2(max(n_side / float(target_bucket_rows), 1.0))))
 
 
@@ -2125,24 +2132,28 @@ def kcenter_coreset(
     the output doubles as the cover assignment (which center, how far),
     i.e. the per-example "novelty" a curation pipeline thresholds.
 
-    How the centers are picked is a two-regime trade, split at
-    ``incremental_rows_max``:
+    How the centers are picked is a two-regime trade. A seed probe (the
+    first clean row in id order, which also fixes ``dim``) and a
+    vector-free ``count()`` — the scan reads no vector bytes — decide
+    it before any vector leaves the executors:
 
-    - **At or below it (driver regime):** the (id, vec) projection is
-      collected ONCE (Arrow; the same job is the regime probe) and
+    - **At or below ``incremental_rows_max`` rows and
+      ``_KCENTER_COLLECT_BYTES_MAX`` bytes (driver regime):** the
+      (id, vec) projection is collected ONCE (Arrow) and
       farthest-first runs in numpy with Spark's own arithmetic: the
       index-order fold ``acc + (a-b)*(a-b)`` from 0.0, ``sqrt``, then
       ``round`` HALF_UP (``_round_half_up``, bit-identical to Spark's
       BigDecimal rounding), then ``least`` and the (dist desc, id asc)
-      pick. One job instead of k-1 one-row Spark rounds — like CC's
-      driver union-find, the input is shipped to where the work is.
-      200k rows x (8+8*dim) bytes ~= 100 MB at dim 64, the
-      broadcast-class budget. Inputs the numpy replay cannot mirror
-      exactly keep the Spark regime: ids that are not integral/string
-      (the ``_arrow_id_type`` contract) or NULL, and clean-length
-      vectors with a NaN/±Inf element (Spark orders NaN above every
-      value).
-    - **Above it (the 100 TB regime):** the projection is cached
+      pick. A fixed number of jobs instead of k-1 one-row Spark rounds
+      — like CC's driver union-find, the input is shipped to where the
+      work is. 200k rows x (8+8*dim) bytes ~= 100 MB at dim 64; wider
+      vectors (dim 768: 1.2 GB, past the default
+      ``spark.driver.maxResultSize``) stay in Spark. Inputs the numpy
+      replay cannot mirror exactly keep the Spark regime: ids that are
+      not integral/string (the ``_arrow_id_type`` contract) or NULL, and
+      clean-length vectors with a NaN/±Inf element (Spark orders NaN
+      above every value).
+    - **Otherwise (the 100 TB regime):** the projection is cached
       (MEMORY_AND_DISK, never a corpus-sized write) and each of the k-1
       rounds is one TakeOrderedAndProject for the single farthest row;
       mindist is RECOMPUTED from the current center set as a running
@@ -2164,61 +2175,62 @@ def kcenter_coreset(
 
     Returns (id, center_rank of nearest, dist to it, is_center).
     """
+    clean = F.col(vec_col).isNotNull()
     base = corpus.select(
         F.col(id_col).alias("__id"),
         to_double_array(F.col(vec_col)).alias("__v"),
     )
-    centers = None  # [(id, vec)] in rank order; None = Spark regime
-    if base.schema["__id"].dataType.simpleString() in _ARROW_ID_TYPES:
-        # NULL elements arrive as NaN over Arrow: flag them JVM-side
-        small = (
-            base.selectExpr("*", "exists(__v, x -> x IS NULL) AS __nul")
-            .limit(incremental_rows_max + 1)
-            .toPandas()
-        )
-        if len(small) <= incremental_rows_max:
-            centers = _kcenter_farthest_first(
-                small, int(k), round_to, corpus.sparkSession
-            )
-    spark_regime = centers is None
-    if spark_regime:
-        # seed = first clean row in id order (deterministic)
-        first = (
-            base.filter(F.col("__v").isNotNull() & (F.size("__v") > 0))
-            .orderBy("__id")
-            .limit(1)
-            .collect()
-        )
-        centers = [(first[0]["__id"], list(first[0]["__v"]))] if first else []
-    if not centers:
+    # dim from the first clean row (id order — deterministic)
+    first = (
+        base.filter(clean & (F.size("__v") > 0)).orderBy("__id").limit(1).collect()
+    )
+    if not first:
         return corpus.select(
             F.col(id_col),
             F.lit(None).cast("int").alias("center_rank"),
             F.lit(None).cast("double").alias("dist"),
             F.lit(False).alias("is_center"),
         )
-    dim = len(centers[0][1])
+    dim = len(first[0]["__v"])
+    ok = F.col("__v").isNotNull() & (F.size("__v") == dim)
 
-    # The plan is built from SQL text, not Column calls: each F.col /
-    # when / alias is ~13 Py4J round-trips, and the Column form of this
-    # plan cost ~2,000 of them (~0.5 s) per call at k=16. Same
-    # expression trees, same doubles.
-    def dist_to(center_vec: list[float]) -> str:
-        # repr round-trips a double exactly (as nearest_cells_sql);
-        # non-finite values only reach the Spark regime
-        lits = ", ".join(
-            f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
-            for x in map(float, center_vec)
-        )
-        return (
-            f"CASE WHEN __v IS NOT NULL AND size(__v) = {dim} THEN round(sqrt("
-            f"aggregate(zip_with(__v, array({lits}), (a, b) -> (a - b) * (a - b)), "
-            f"0D, (acc, x) -> acc + x)), {round_to}) + 0D END"
+    def dist_to(center_vec: list[float]):
+        # one array literal: ~1 Py4J call per element to fill the Java
+        # array, where an array() of per-element lit()s costs ~5
+        lit_arr = F.lit(np.asarray(center_vec, dtype=np.float64))
+        return F.when(
+            ok,
+            F.round(
+                F.sqrt(
+                    F.aggregate(
+                        F.zip_with(F.col("__v"), lit_arr, lambda a, b: (a - b) * (a - b)),
+                        F.lit(0.0),
+                        lambda acc, x: acc + x,
+                    )
+                ),
+                round_to,
+            )
+            + F.lit(0.0),
         )
 
+    # regime split (see docstring): the count prunes the vector column
+    centers = None  # [(id, vec)] in rank order; None = Spark regime
+    if (
+        base.schema["__id"].dataType.simpleString() in _ARROW_ID_TYPES
+        and (n := base.count()) <= incremental_rows_max
+        and n * (8 + 8 * dim) <= _KCENTER_COLLECT_BYTES_MAX
+    ):
+        # NULL elements arrive as NaN over Arrow: flag them JVM-side
+        small = base.selectExpr("*", "exists(__v, x -> x IS NULL) AS __nul").toPandas()
+        centers = _kcenter_farthest_first(small, int(k), round_to, corpus.sparkSession)
+    spark_regime = centers is None
+    if spark_regime:
+        centers = [(first[0]["__id"], list(first[0]["__v"]))]
     center_ids = [c for c, _ in centers]
-    # one distance expression per center, built ONCE when the center is
-    # selected and reused by every later round's plan
+    # one UNRESOLVED distance Column per center, built ONCE when the
+    # center is selected and reused across every later round's plan —
+    # rebuilding them is O(k^2 * dim) Py4J literal round-trips of pure
+    # driver overhead (measured ~0.9 s/round by round 15 at dim=64)
     center_dists = [dist_to(v) for _, v in centers]
 
     # stage the per-center distance folds as NAMED columns, then derive
@@ -2227,13 +2239,15 @@ def kcenter_coreset(
     # (measured 5x wall at sf0.1 from analysis cost alone);
     # CollapseProject keeps non-cheap multi-use aliases staged, so each
     # fold appears exactly once in the plan
-    def staged(extra: list[str]) -> DataFrame:
-        nc = len(center_dists)
-        proj = base.selectExpr(
-            "__id", "__v", *[f"{d} AS __d{r}" for r, d in enumerate(center_dists)]
+    def staged(extra: list) -> DataFrame:
+        proj = base.select(
+            "__id",
+            "__v",
+            *[c.alias(f"__d{r}") for r, c in enumerate(center_dists)],
         )
-        mind = "__d0" if nc == 1 else f"least({', '.join(f'__d{r}' for r in range(nc))})"
-        return proj.selectExpr("__id", "__v", f"{mind} AS mindist", *extra)
+        dcols = [F.col(f"__d{r}") for r in range(len(center_dists))]
+        mind = dcols[0] if len(dcols) == 1 else F.least(*dcols)
+        return proj.select("__id", "__v", mind.alias("mindist"), *extra)
 
     if spark_regime:
         base.persist(StorageLevel.MEMORY_AND_DISK)
@@ -2261,12 +2275,20 @@ def kcenter_coreset(
     # nearest = FIRST (earliest-rank) center achieving mindist — the
     # earlier center wins ties. Dirty rows: every distance is NULL ->
     # every branch falls through -> NULL mindist/nearest.
-    near = " ".join(f"WHEN __d{r} = mindist THEN {r}" for r in range(len(center_dists)))
-    return staged([f"CASE {near} END AS center_rank"]).select(
+    nc = len(center_dists)
+    dcols = [F.col(f"__d{r}") for r in range(nc)]
+    if nc == 1:
+        near = F.when(F.col("mindist").isNotNull(), F.lit(0))
+    else:
+        near = F.when(dcols[0] == F.col("mindist"), F.lit(0))
+        for r in range(1, nc):
+            near = near.when(dcols[r] == F.col("mindist"), F.lit(r))
+    is_center = F.col("__id").isin(center_ids)
+    return staged(dcols).select(
         F.col("__id").alias(id_col),
-        "center_rank",
+        near.otherwise(F.lit(None)).cast("int").alias("center_rank"),
         F.col("mindist").alias("dist"),
-        (F.col("__id").isin(center_ids) & F.col("mindist").isNotNull()).alias("is_center"),
+        (is_center & F.col("mindist").isNotNull()).alias("is_center"),
     )
 
 
@@ -2278,8 +2300,7 @@ def _round_half_up(x: np.ndarray, scale: int, spark) -> np.ndarray:
     the nearest integer n of grid steps, and ``n / 10**scale`` is what
     ``doubleValue`` returns. Values in the error band of a half-grid
     point (or too large for the grid test; ~2 in 10^6 random distances)
-    take the JVM's ``Double.toString``, in one batched call, and an exact
-    decimal HALF_UP."""
+    take the JVM's ``Double.toString`` and an exact decimal HALF_UP."""
     p = 10.0**scale
     t = x * p
     fl = np.floor(t)
@@ -2287,35 +2308,26 @@ def _round_half_up(x: np.ndarray, scale: int, spark) -> np.ndarray:
         # |x*p - toString(x)*p| < 1.5 ulp(t): the 4-ulp band covers it
         settled = np.abs(t - fl - 0.5) >= np.maximum(1e-6, 4 * np.spacing(np.abs(t)))
         out = np.where(np.isfinite(x), (fl + (t - fl > 0.5)) / p, x)
-    todo = np.flatnonzero(~settled & np.isfinite(x))
-    if len(todo):
-        gw = spark.sparkContext._gateway
-        arr = gw.new_array(gw.jvm.double, len(todo))
-        gw.jvm.java.nio.ByteBuffer.wrap(x[todo].astype(">f8").tobytes()).asDoubleBuffer().get(arr)
-        # Arrays.toString formats each element with Double.toString
-        strs = gw.jvm.java.util.Arrays.toString(arr)[1:-1].split(", ")
-        grid, ctx = Decimal(1).scaleb(-scale), Context(prec=400)
-        for i, s in zip(todo, strs):
-            out[i] = float(Decimal(s).quantize(grid, ROUND_HALF_UP, ctx)) + 0.0  # no -0 in BigDecimal
+    grid, ctx = Decimal(1).scaleb(-scale), Context(prec=400)
+    for i in np.flatnonzero(~settled & np.isfinite(x)):
+        s = spark.sparkContext._jvm.java.lang.Double.toString(float(x[i]))
+        out[i] = float(Decimal(s).quantize(grid, ROUND_HALF_UP, ctx)) + 0.0  # no -0 in BigDecimal
     return out
 
 
 def _kcenter_farthest_first(pdf: pd.DataFrame, k: int, round_to: int, spark):
     """kcenter_coreset's driver regime over the collected (__id, __v,
-    __nul) rows: the same centers, in the same rank order, as the Spark
-    rounds. Returns [(id, vec)], [] when no row has a non-empty vector,
-    or None when the input needs the Spark regime (NULL id, a NaN/±Inf
-    element in a clean-length vector, or a seed with a NULL element —
-    the Spark regime rejects that seed)."""
+    __nul) rows, at least one of them clean: the same centers, in the
+    same rank order, as the Spark rounds. Returns [(id, vec)], or None
+    when the input needs the Spark regime (NULL id, a NaN/±Inf element
+    in a clean-length vector, or a seed with a NULL element — the Spark
+    regime rejects that seed)."""
     if pdf["__id"].isna().any():
         return None
     pdf = pdf.sort_values("__id", kind="stable")  # code-point = Spark's byte order
     vecs, nul = pdf["__v"].to_numpy(), pdf["__nul"].eq(True).to_numpy()
     lens = np.array([-1 if v is None else len(v) for v in vecs])
-    nonempty = np.flatnonzero(lens > 0)
-    if not len(nonempty):
-        return []
-    seed = nonempty[0]
+    seed = np.flatnonzero(lens > 0)[0]
     if nul[seed]:
         return None
     # a NULL element makes every Spark distance NULL: the row is dirty

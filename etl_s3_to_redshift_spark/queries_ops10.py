@@ -1455,11 +1455,12 @@ def dedup_lines_keepfirst(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vector, repeatedly add the point farthest from the selected "
         "set (k=16), and emit every point's nearest-center assignment "
         "and distance — the diversity sample plus the per-example "
-        "novelty signal. Two regimes pick the same centers: at or "
-        "under 200k rows the (id, vec) projection is collected once "
-        "and farthest-first runs on the driver in numpy with Spark's "
-        "own fold, sqrt and HALF_UP rounding (one job); above it, or "
-        "for NaN/Inf elements and NULL or non-integral/string ids, each "
+        "novelty signal. Two regimes pick the same centers: a seed "
+        "probe and a vector-free count decide; at or under 200k rows "
+        "and 128 MiB the (id, vec) projection is collected once and "
+        "farthest-first runs on the driver in numpy with Spark's own "
+        "fold, sqrt and HALF_UP rounding; above either bound, or for "
+        "NaN/Inf elements and NULL or non-integral/string ids, each "
         "of the k-1 rounds is one TakeOrderedAndProject of a single "
         "row over the cached projection, mindist recomputed as a "
         "least() over the center-literal folds. The returned frame is "

@@ -667,7 +667,7 @@ def test_kcenter_regimes_bit_identical_over_the_bound(spark, monkeypatch):
         got = [kcenter_coreset(df, k=k), kcenter_coreset(df, k=k, incremental_rows_max=0)]
         drv, rec = (sorted(repr(tuple(r)) for r in g.collect()) for g in got)
         assert drv == rec and len(drv) == len(rows), (rows, k, drv, rec)
-        return picks[0]
+        return picks[0] if picks else None  # None: no clean row, no regime ran
 
     mixed = [
         (0, [0.0, 0.0, 0.0]),  # seed
@@ -684,7 +684,7 @@ def test_kcenter_regimes_bit_identical_over_the_bound(spark, monkeypatch):
     for k in (1, 7):  # 7 > the 5 distinct clean points: early stop
         assert len(both(mixed, k)) == min(k, 5)
     assert len(both([(i, [1.0, 2.0]) for i in range(4)], 3)) == 1  # identical
-    assert both([(0, None), (1, [])], 3) == []  # all dirty
+    assert both([(0, None), (1, [])], 3) is None  # all dirty
     strs = [
         ("b", [0.0, 0.0]),
         ("a", [1.0, 1.0]),
@@ -704,6 +704,12 @@ def test_kcenter_regimes_bit_identical_over_the_bound(spark, monkeypatch):
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
         kcenter_coreset(df, k=2).collect()
         assert picks == [None], rows  # the Spark regime ran
+    # past the collect byte budget (10 rows x 32 bytes here) the driver
+    # regime is never entered
+    monkeypatch.setattr(similarity, "_KCENTER_COLLECT_BYTES_MAX", 300)
+    picks.clear()
+    wide = [(i, [float(i), float(i % 3), 1.0]) for i in range(10)]
+    assert both(wide, 4) is None
 
 
 def test_round_half_up_matches_spark_round(spark):
@@ -736,25 +742,30 @@ def test_round_half_up_matches_spark_round(spark):
     assert got.view(np.int64).tolist() == want.view(np.int64).tolist()
 
 
-def test_kcenter_small_input_builds_in_one_job(spark):
-    """Under the row bound all k centers come from ONE collected job —
-    not one Spark round per center — and the returned frame is lazy."""
+def test_kcenter_small_input_build_jobs_do_not_grow_with_k(spark):
+    """Under the row bound all k centers come from a fixed set of jobs —
+    the seed probe, the vector-free count (two jobs under AQE) and ONE
+    collect — not one Spark round per center, and the returned frame is
+    lazy."""
     from etl_s3_to_redshift_spark.operators.similarity import kcenter_coreset
 
     from tests.conftest import SF_ORACLE
 
     sc = spark.sparkContext
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    group = "kcenter-small-input-build"
     keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
     saved = {k: sc.getLocalProperty(k) for k in keys}
-    sc.setJobGroup(group, "kcenter_coreset build")
+    jobs = {}
     try:
-        kcenter_coreset(emb, k=16)
+        for k in (1, 16):
+            group = f"kcenter-small-input-build-k{k}"
+            sc.setJobGroup(group, "kcenter_coreset build")
+            kcenter_coreset(emb, k=k)
+            jobs[k] = len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         for k, v in saved.items():
             sc.setLocalProperty(k, v)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    assert jobs[16] == jobs[1] <= 4, jobs
 
 
 def test_kcenter_releases_every_cache_block(spark):
