@@ -29,42 +29,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pairs_within_buckets(
-    df: DataFrame,
-    bucket_cols: list[str],
-    id_col: str,
-    payload_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Distinct (id_a < id_b) pairs co-located in ≥1 bucket.
-
-    ``payload_cols`` ride along per side as ``<col>_a`` / ``<col>_b``
-    (must be functionally dependent on the id, e.g. a signature).
-    """
-    if payload_cols:
-        item = F.struct(F.col(id_col), *[F.col(c) for c in payload_cols])
-    else:
-        item = F.col(id_col)
+def pairs_within_buckets(df: DataFrame, bucket_cols: list[str], id_col: str) -> DataFrame:
+    """Distinct (id_a < id_b) pairs co-located in ≥1 bucket. The in-row
+    pair expansion is SQL text, one JVM call: Column-built nested
+    ``transform`` lambdas cost a few Py4J calls per lambda variable."""
     grp = (
         df.groupBy(*bucket_cols)
-        .agg(F.collect_set(item).alias("__ids"))
+        .agg(F.collect_set(id_col).alias("__ids"))
         .filter(F.size("__ids") > 1)
         .select(F.array_sort("__ids").alias("__ids"))
     )
-    pairs = F.flatten(
-        F.transform(
-            F.col("__ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("__ids"), i + 2, F.size(F.col("__ids"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    out = grp.select(F.explode(pairs).alias("p"))
-    if payload_cols:
-        return out.select(
-            F.col(f"p.a.{id_col}").alias("id_a"),
-            F.col(f"p.b.{id_col}").alias("id_b"),
-            *[F.col(f"p.a.{c}").alias(f"{c}_a") for c in payload_cols],
-            *[F.col(f"p.b.{c}").alias(f"{c}_b") for c in payload_cols],
-        ).distinct()
-    return out.select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b")).distinct()
+    return grp.selectExpr(
+        "explode(flatten(transform(__ids, (x, i) -> transform("
+        "slice(__ids, i + 2, size(__ids)), y -> struct(x AS a, y AS b))))) AS p"
+    ).selectExpr("p.a AS id_a", "p.b AS id_b").distinct()

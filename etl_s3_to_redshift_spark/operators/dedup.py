@@ -23,12 +23,13 @@ no Python, no UDFs anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from etl_s3_to_redshift_spark.functions.text import normalize_text, shingles, words
 from etl_s3_to_redshift_spark.operators.blocking import pairs_within_buckets
+from etl_s3_to_redshift_spark.sources.tables import _read_parquet
 
 
 def exact_dedup(
@@ -168,19 +169,15 @@ def jaccard_pairs(
     return out
 
 
-def _sig_cols(num_hashes: int, sh_col: str = "sh") -> list[Column]:
-    """num_hashes MinHash columns over a per-doc shingle-array column:
-    h_i = array_min(transform(sh, s -> xxhash64(i, s))). Narrow — no
-    explode, no aggregate; the hashing happens inside the row."""
-
-    def hasher(i: int):
-        # single-arg lambda on purpose: a two-arg lambda would make
-        # F.transform bind the second argument to the ARRAY INDEX,
-        # silently shadowing the seed.
-        return lambda s: F.xxhash64(F.lit(i), s)
-
+def _sig_cols(num_hashes: int, sh_col: str = "sh") -> list[str]:
+    """num_hashes MinHash projections over a per-doc shingle-array column,
+    as SQL text for one ``selectExpr``:
+    h_i = array_min(transform(sh, s -> xxhash64(i, s))), the seed an INT
+    literal. Narrow — no explode, no aggregate; the hashing happens inside
+    the row. Text, not Columns: a Column-built ``transform`` costs a few
+    Py4J calls per hash to create its lambda variable."""
     return [
-        F.array_min(F.transform(F.col(sh_col), hasher(i))).alias(f"h{i}")
+        f"array_min(transform(`{sh_col}`, s -> xxhash64({i}, s))) AS h{i}"
         for i in range(num_hashes)
     ]
 
@@ -204,7 +201,7 @@ def minhash_signatures(
     Returns (id, h0..h{n-1}).
     """
     sets = _shingle_sets(df, text_col, id_col, k)
-    return sets.select(F.col(id_col), *_sig_cols(num_hashes))
+    return sets.selectExpr(f"`{id_col}`", *_sig_cols(num_hashes))
 
 
 def minhash_lsh_pairs(
@@ -240,7 +237,7 @@ def minhash_lsh_pairs(
     computed exactly once (pinned in tests).
     """
     sets = _shingle_sets(df, text_col, id_col, k)
-    staged = sets.select(F.col(id_col), F.col("sh"), *_sig_cols(num_hashes))
+    staged = sets.selectExpr(f"`{id_col}`", "sh", *_sig_cols(num_hashes))
     return _lsh_pairs_from(staged, threshold, id_col, num_hashes, bands, verify)
 
 
@@ -266,7 +263,7 @@ def stage_minhash(
     staged table is also the natural incremental seam (append new docs,
     re-run banding)."""
     sets = _shingle_sets(df, text_col, id_col, k)
-    sets.select(F.col(id_col), F.col("sh"), *_sig_cols(num_hashes)).write.mode(
+    sets.selectExpr(f"`{id_col}`", "sh", *_sig_cols(num_hashes)).write.mode(
         "overwrite"
     ).parquet(path)
 
@@ -284,7 +281,7 @@ def minhash_lsh_pairs_staged(
     banding, same exact-Jaccard verify — pinned in tests), but every
     branch reads the staged parquet instead of re-deriving shingles from
     text. ``num_hashes`` is inferred from the staged schema."""
-    staged = spark.read.parquet(path)
+    staged = _read_parquet(spark, path)
     num_hashes = sum(1 for c in staged.columns if c.startswith("h") and c[1:].isdigit())
     return _lsh_pairs_from(staged, threshold, id_col, num_hashes, bands, verify)
 
@@ -293,19 +290,18 @@ def _band_keys(
     sig_frame: DataFrame, id_col: str, num_hashes: int, bands: int
 ) -> DataFrame:
     """(id, band, bucket) LSH band keys from a (id, ..., h0..h{n-1})
-    frame: bucket = xxhash64 of the band's signature rows."""
+    frame: bucket = xxhash64 of the band's signature rows. One
+    ``selectExpr`` for all bands."""
     rows_per_band = num_hashes // bands
-    sig = sig_frame.select(F.col(id_col), *[F.col(f"h{i}") for i in range(num_hashes)])
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(*[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]).alias("bucket"),
-        )
+    band_structs = ", ".join(
+        f"struct({b} AS band, xxhash64("
+        + ", ".join(f"h{b * rows_per_band + r}" for r in range(rows_per_band))
+        + ") AS bucket)"
         for b in range(bands)
-    ]
-    return sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
+    return sig_frame.selectExpr(
+        f"`{id_col}`", f"explode(array({band_structs})) AS bb"
+    ).selectExpr(f"`{id_col}`", "bb.band AS band", "bb.bucket AS bucket")
 
 
 def _lsh_pairs_from(
@@ -589,8 +585,8 @@ def minhash_append_pairs(
     new_ids = fresh.select(F.col(id_col)).localCheckpoint(
         eager=True, storageLevel=StorageLevel.DISK_ONLY
     )
-    new_sigs = _shingle_sets(fresh, text_col, id_col, k).select(
-        F.col(id_col), F.col("sh"), *_sig_cols(num_hashes)
+    new_sigs = _shingle_sets(fresh, text_col, id_col, k).selectExpr(
+        f"`{id_col}`", "sh", *_sig_cols(num_hashes)
     )
     new_sigs.write.mode("append").parquet(path)
     # Re-read AFTER the append: the staged table is now base ∪ new, and

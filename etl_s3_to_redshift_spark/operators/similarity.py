@@ -2175,14 +2175,16 @@ def kcenter_coreset(
 
     Returns (id, center_rank of nearest, dist to it, is_center).
     """
-    clean = F.col(vec_col).isNotNull()
     base = corpus.select(
         F.col(id_col).alias("__id"),
         to_double_array(F.col(vec_col)).alias("__v"),
     )
-    # dim from the first clean row (id order — deterministic)
+    # seed and dim: the first clean row in id order (deterministic)
     first = (
-        base.filter(clean & (F.size("__v") > 0)).orderBy("__id").limit(1).collect()
+        base.filter("__v IS NOT NULL AND size(__v) > 0 AND NOT exists(__v, x -> x IS NULL)")
+        .orderBy("__id")
+        .limit(1)
+        .collect()
     )
     if not first:
         return corpus.select(
@@ -2192,25 +2194,20 @@ def kcenter_coreset(
             F.lit(False).alias("is_center"),
         )
     dim = len(first[0]["__v"])
-    ok = F.col("__v").isNotNull() & (F.size("__v") == dim)
 
-    def dist_to(center_vec: list[float]):
+    def center_lit(r: int, center_vec: list[float]) -> Column:
         # one array literal: ~1 Py4J call per element to fill the Java
-        # array, where an array() of per-element lit()s costs ~5
-        lit_arr = F.lit(np.asarray(center_vec, dtype=np.float64))
-        return F.when(
-            ok,
-            F.round(
-                F.sqrt(
-                    F.aggregate(
-                        F.zip_with(F.col("__v"), lit_arr, lambda a, b: (a - b) * (a - b)),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                ),
-                round_to,
-            )
-            + F.lit(0.0),
+        # array, where an array() of per-element lit()s costs ~5. Doubles
+        # stay in the literal, never in SQL text.
+        return F.lit(np.asarray(center_vec, dtype=np.float64)).alias(f"__c{r}")
+
+    def dist_to(r: int) -> str:
+        # SQL text holds only names and integer literals: one parse call,
+        # where a Column-built zip_with/aggregate costs ~20 Py4J calls
+        return (
+            f"CASE WHEN __v IS NOT NULL AND size(__v) = {dim} THEN round(sqrt("
+            f"aggregate(zip_with(__v, __c{r}, (a, b) -> (a - b) * (a - b)), "
+            f"0.0D, (acc, x) -> acc + x)), {int(round_to)}) + 0.0D END AS __d{r}"
         )
 
     # regime split (see docstring): the count prunes the vector column
@@ -2227,26 +2224,26 @@ def kcenter_coreset(
     if spark_regime:
         centers = [(first[0]["__id"], list(first[0]["__v"]))]
     center_ids = [c for c, _ in centers]
-    # one UNRESOLVED distance Column per center, built ONCE when the
-    # center is selected and reused across every later round's plan —
-    # rebuilding them is O(k^2 * dim) Py4J literal round-trips of pure
-    # driver overhead (measured ~0.9 s/round by round 15 at dim=64)
-    center_dists = [dist_to(v) for _, v in centers]
+    # one center literal per center, built ONCE when the center is
+    # selected and reused across every later round's plan — rebuilding
+    # them is O(k^2 * dim) Py4J literal round-trips of pure driver
+    # overhead (measured ~0.9 s/round by round 15 at dim=64)
+    center_lits = [center_lit(r, v) for r, (_, v) in enumerate(centers)]
 
-    # stage the per-center distance folds as NAMED columns, then derive
-    # mindist/nearest from column refs — inlining the least() expression
-    # into every when-branch would blow the tree up O(r^2) per round
-    # (measured 5x wall at sf0.1 from analysis cost alone);
-    # CollapseProject keeps non-cheap multi-use aliases staged, so each
-    # fold appears exactly once in the plan
+    # stage the center literals and the per-center distance folds as
+    # NAMED columns, then derive mindist/nearest from column refs —
+    # inlining the least() expression into every when-branch would blow
+    # the tree up O(r^2) per round (measured 5x wall at sf0.1 from
+    # analysis cost alone); CollapseProject inlines the literals and
+    # keeps non-cheap multi-use aliases staged, so each fold appears
+    # exactly once in the plan
     def staged(extra: list) -> DataFrame:
-        proj = base.select(
-            "__id",
-            "__v",
-            *[c.alias(f"__d{r}") for r, c in enumerate(center_dists)],
+        nc = len(center_lits)
+        proj = base.select("__id", "__v", *center_lits).selectExpr(
+            "__id", "__v", *[dist_to(r) for r in range(nc)]
         )
-        dcols = [F.col(f"__d{r}") for r in range(len(center_dists))]
-        mind = dcols[0] if len(dcols) == 1 else F.least(*dcols)
+        dcols = [F.col(f"__d{r}") for r in range(nc)]
+        mind = dcols[0] if nc == 1 else F.least(*dcols)
         return proj.select("__id", "__v", mind.alias("mindist"), *extra)
 
     if spark_regime:
@@ -2263,7 +2260,7 @@ def kcenter_coreset(
             if not far or far[0]["mindist"] == 0.0:
                 break  # fewer than k distinct points — cover is exact
             center_ids.append(far[0]["__id"])
-            center_dists.append(dist_to(list(far[0]["__v"])))
+            center_lits.append(center_lit(len(center_lits), list(far[0]["__v"])))
         # release the base cache (VERDICT r10 #3): the k driver rounds —
         # the reason it was cached — are done; the returned frame's one
         # materialization re-reads the narrow (id, vec) projection
@@ -2275,7 +2272,7 @@ def kcenter_coreset(
     # nearest = FIRST (earliest-rank) center achieving mindist — the
     # earlier center wins ties. Dirty rows: every distance is NULL ->
     # every branch falls through -> NULL mindist/nearest.
-    nc = len(center_dists)
+    nc = len(center_lits)
     dcols = [F.col(f"__d{r}") for r in range(nc)]
     if nc == 1:
         near = F.when(F.col("mindist").isNotNull(), F.lit(0))
@@ -2283,7 +2280,12 @@ def kcenter_coreset(
         near = F.when(dcols[0] == F.col("mindist"), F.lit(0))
         for r in range(1, nc):
             near = near.when(dcols[r] == F.col("mindist"), F.lit(r))
-    is_center = F.col("__id").isin(center_ids)
+    # null-safe membership: IN is NULL on a NULL id, but a NULL-id center
+    # is a center and any other row is False
+    ids = [c for c in center_ids if c is not None]
+    is_center = F.coalesce(
+        F.col("__id").isin(ids), F.col("__id").isNull() & F.lit(len(ids) < len(center_ids))
+    )
     return staged(dcols).select(
         F.col("__id").alias(id_col),
         near.otherwise(F.lit(None)).cast("int").alias("center_rank"),
@@ -2319,18 +2321,16 @@ def _kcenter_farthest_first(pdf: pd.DataFrame, k: int, round_to: int, spark):
     """kcenter_coreset's driver regime over the collected (__id, __v,
     __nul) rows, at least one of them clean: the same centers, in the
     same rank order, as the Spark rounds. Returns [(id, vec)], or None
-    when the input needs the Spark regime (NULL id, a NaN/±Inf element
-    in a clean-length vector, or a seed with a NULL element — the Spark
-    regime rejects that seed)."""
+    when the input needs the Spark regime (NULL id, or a NaN/±Inf
+    element in a clean-length vector)."""
     if pdf["__id"].isna().any():
         return None
     pdf = pdf.sort_values("__id", kind="stable")  # code-point = Spark's byte order
     vecs, nul = pdf["__v"].to_numpy(), pdf["__nul"].eq(True).to_numpy()
     lens = np.array([-1 if v is None else len(v) for v in vecs])
-    seed = np.flatnonzero(lens > 0)[0]
-    if nul[seed]:
-        return None
-    # a NULL element makes every Spark distance NULL: the row is dirty
+    # a NULL element makes every Spark distance NULL: the row is dirty,
+    # never the seed (the same first clean row as the Spark seed probe)
+    seed = np.flatnonzero((lens > 0) & ~nul)[0]
     ok = (lens == lens[seed]) & ~nul
     vt = np.ascontiguousarray(np.stack(vecs[ok]).astype(np.float64).T)
     if not np.isfinite(vt).all():

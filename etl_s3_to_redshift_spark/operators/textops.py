@@ -572,6 +572,84 @@ def _session_spill_regime(spark, threshold: int = 96) -> bool:
         return False
 
 
+def _bigram_tf(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, w1, w2, tf): each document's bigram counts, run-length
+    counted over its sorted gram array in the row (see
+    ``bigram_logprob_scores``). Docs with no bigram, NULL text included,
+    give no row."""
+    arr = F.filter(
+        F.split(F.lower(F.col(text_col)), "[^a-z]+"), lambda x: x != ""
+    )
+    m = F.greatest(F.size(arr) - 1, F.lit(0))
+    grams = F.zip_with(
+        F.slice(arr, 1, m),
+        F.slice(arr, 2, m),
+        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+    )
+    # STAGE each array as a real projected column before anything
+    # references it from inside a higher-order-function lambda: a bare
+    # expression is INLINED at every use by the analyzer, and a use
+    # inside a lambda re-evaluates it PER ELEMENT — element_at(<sort
+    # expr>, i) re-sorts the doc's grams for every i, O(n² log n) per
+    # document (measured: the un-staged form hung the sf0.1 bench; the
+    # ngram_top_terms docstring pins the same trap). Multi-use non-cheap
+    # aliases survive CollapseProject, so each step evaluates once per
+    # row.
+    s = F.col("__s")
+    n = F.size(s)
+    # run starts: 1-based positions where the sorted gram differs from
+    # its predecessor (position 1 guarded — ANSI element_at(s, 0) would
+    # throw; CaseWhen evaluates lazily, so the otherwise-branch never
+    # sees i == 1). The empty guard is mandatory HERE, not only on
+    # ``runs``: staged as its own column this evaluates for every row,
+    # and sequence(1, 0) DESCENDS ([1, 0]) — its 0 would reach
+    # element_at. A NULL-text doc has a NULL gram array, whose size is
+    # NULL under ANSI and -1 without it: both take the guard too
+    empty = n.isNull() | (n <= 0)
+    idx_expr = F.when(empty, F.array().cast("array<int>")).otherwise(
+        F.filter(
+            F.sequence(F.lit(1), n),
+            lambda i: F.when(i == F.lit(1), F.lit(True)).otherwise(
+                F.element_at(s, i) != F.element_at(s, i - 1)
+            ),
+        )
+    )
+    # each run's end boundary = the next run's start (size+1 for the
+    # last); an empty doc must short-circuit BEFORE sequence/zip_with:
+    # sequence(1, 0) descends and zip_with null-pads the shorter side
+    idx = F.col("__idx")
+    nxt = F.concat(
+        F.slice(idx, 2, F.greatest(F.size(idx) - 1, F.lit(0))),
+        F.array(n + 1),
+    )
+    runs = F.when(
+        empty,
+        F.lit(None).cast("array<struct<g:struct<w1:string,w2:string>,tf:bigint>>"),
+    ).otherwise(
+        F.zip_with(
+            idx,
+            nxt,
+            lambda a, b: F.struct(
+                F.element_at(s, a).alias("g"), (b - a).cast("long").alias("tf")
+            ),
+        )
+    )
+    # exactly the rows groupBy(doc, w1, w2) produced — computed without
+    # the exchange (explode(NULL) drops gram-less docs, matching the
+    # old shape where such docs contributed no pair rows)
+    return (
+        df.select(F.col(id_col), F.array_sort(grams).alias("__s"))
+        .select(id_col, "__s", idx_expr.alias("__idx"))
+        .select(id_col, F.explode(runs).alias("r"))
+        .select(
+            id_col,
+            F.col("r.g.w1").alias("w1"),
+            F.col("r.g.w2").alias("w2"),
+            F.col("r.tf").alias("tf"),
+        )
+    )
+
+
 def bigram_logprob_scores(
     df: DataFrame,
     text_col: str = "text",
@@ -612,75 +690,7 @@ def bigram_logprob_scores(
     recorded). ``vocab_size``: passing it pins V as a literal; None
     derives it in-plan (same exact integer).
     """
-    arr = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z]+"), lambda x: x != ""
-    )
-    m = F.greatest(F.size(arr) - 1, F.lit(0))
-    grams = F.zip_with(
-        F.slice(arr, 1, m),
-        F.slice(arr, 2, m),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    # STAGE each array as a real projected column before anything
-    # references it from inside a higher-order-function lambda: a bare
-    # expression is INLINED at every use by the analyzer, and a use
-    # inside a lambda re-evaluates it PER ELEMENT — element_at(<sort
-    # expr>, i) re-sorts the doc's grams for every i, O(n² log n) per
-    # document (measured: the un-staged form hung the sf0.1 bench; the
-    # ngram_top_terms docstring pins the same trap). Multi-use non-cheap
-    # aliases survive CollapseProject, so each step evaluates once per
-    # row.
-    s = F.col("__s")
-    n = F.size(s)
-    # run starts: 1-based positions where the sorted gram differs from
-    # its predecessor (position 1 guarded — ANSI element_at(s, 0) would
-    # throw; CaseWhen evaluates lazily, so the otherwise-branch never
-    # sees i == 1). The n == 0 guard is mandatory HERE, not only on
-    # ``runs``: staged as its own column this evaluates for every row,
-    # and sequence(1, 0) DESCENDS ([1, 0]) — its 0 would reach
-    # element_at
-    idx_expr = F.when(n == 0, F.array().cast("array<int>")).otherwise(
-        F.filter(
-            F.sequence(F.lit(1), n),
-            lambda i: F.when(i == F.lit(1), F.lit(True)).otherwise(
-                F.element_at(s, i) != F.element_at(s, i - 1)
-            ),
-        )
-    )
-    # each run's end boundary = the next run's start (size+1 for the
-    # last); n == 0 must short-circuit BEFORE sequence/zip_with:
-    # sequence(1, 0) descends and zip_with null-pads the shorter side
-    idx = F.col("__idx")
-    nxt = F.concat(
-        F.slice(idx, 2, F.greatest(F.size(idx) - 1, F.lit(0))),
-        F.array(n + 1),
-    )
-    runs = F.when(
-        n == 0,
-        F.lit(None).cast("array<struct<g:struct<w1:string,w2:string>,tf:bigint>>"),
-    ).otherwise(
-        F.zip_with(
-            idx,
-            nxt,
-            lambda a, b: F.struct(
-                F.element_at(s, a).alias("g"), (b - a).cast("long").alias("tf")
-            ),
-        )
-    )
-    # exactly the rows groupBy(doc, w1, w2) produced — computed without
-    # the exchange (explode(NULL) drops gram-less docs, matching the
-    # old shape where such docs contributed no pair rows)
-    tf = (
-        df.select(F.col(id_col), F.array_sort(grams).alias("__s"))
-        .select(id_col, "__s", idx_expr.alias("__idx"))
-        .select(id_col, F.explode(runs).alias("r"))
-        .select(
-            id_col,
-            F.col("r.g.w1").alias("w1"),
-            F.col("r.g.w2").alias("w2"),
-            F.col("r.tf").alias("tf"),
-        )
-    )
+    tf = _bigram_tf(df, text_col, id_col)
     # model counts: same integers the r8 windows produced (Σ tf per
     # key), so neglogp is the identical double per (w1, w2) key
     model12 = tf.groupBy("w1", "w2").agg(F.sum("tf").alias("c12"))

@@ -1,6 +1,8 @@
-"""Explicit schemas — the engine never relies on inference in production
-paths (inference is a full extra pass over the data; at 100 TB that is a
-second scan of the lake).
+"""Explicit schemas for the JSON ingestion path, which never infers one
+(JSON inference is a full extra pass over the data; at 100 TB that is a
+second scan of the lake). Parquet lake reads (``sources/tables.py``)
+take the schema from the file footers: inferred once per file version
+and session, then passed to every later read.
 
 Staging schemas mirror the reference DDL:
 - staging_events: reference sql_queries.py:28-49 (+ the JSONPaths column

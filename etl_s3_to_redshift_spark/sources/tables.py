@@ -3,14 +3,58 @@
 One function to load all tables of a scale-factor directory and one to
 register them as temp views so operators can be written in either the
 DataFrame or SQL API (same Catalyst plan either way).
+
+Lake reads infer each parquet schema once per file version and session
+conf (``_read_parquet``); every later read of the same file passes the
+schema, so building a query starts no schema-inference job.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from etl_s3_to_redshift_spark.schemas import TESTDATA_TABLES
+
+# Session confs that change what parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+_schemas: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema (one Spark job)
+    only the first time it sees this version of the file under these
+    inference confs, then reads with ``.schema(...)`` (no job). The
+    version is the local file's identity: absolute path, inode, size and
+    ``st_mtime_ns`` (an overwrite by Spark replaces a directory, so its
+    inode or mtime changes). A path ``os.stat`` cannot see (``s3a://``,
+    ``hdfs://``) is inferred on every read."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        st.st_ino,
+        st.st_size,
+        st.st_mtime_ns,
+        *(spark.conf.get(c, None) for c in _INFERENCE_CONFS),
+    )
+    schema = _schemas.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _schemas[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -19,7 +63,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # own): TIMESTAMP(NANOS) parquet is unreadable without this conf.
         # Harmless when the lake carries µs timestamps instead.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     # The driver lake's timestamp layout has varied across rounds:
     # TIMESTAMP(NANOS) (arrives as epoch-nanos long under nanosAsLong) vs
     # naive TIMESTAMP(MICROS) (arrives as TIMESTAMP_NTZ). Normalize both to

@@ -302,6 +302,26 @@ def test_unigram_logprob_null_text_invariant_under_ansi(spark):
         spark.conf.set("spark.sql.ansi.enabled", old)
 
 
+def test_bigram_tf_null_text_emits_no_run_row_under_either_ansi(spark):
+    """The run-length bigram tf of a NULL-text doc is no row, not a
+    (NULL, NULL, tf = -1) run: without ANSI, size(NULL) is -1, which
+    must take the empty-doc guard like ANSI's NULL size does (ADVICE
+    r11). Empty and one-token docs give no row either."""
+    from etl_s3_to_redshift_spark.operators.textops import _bigram_tf
+
+    docs = spark.createDataFrame(
+        [(1, "aa bb aa bb"), (2, None), (3, ""), (4, "solo")], "doc_id long, text string"
+    )
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            got = sorted(tuple(r) for r in _bigram_tf(docs, "text", "doc_id").collect())
+            assert got == [(1, "aa", "bb", 2), (1, "bb", "aa", 1)], (ansi, got)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+
+
 def test_perplexity_buckets_rowcount_matches_scores(spark):
     from etl_s3_to_redshift_spark.operators.textops import (
         perplexity_buckets,
@@ -695,6 +715,10 @@ def test_kcenter_regimes_bit_identical_over_the_bound(spark, monkeypatch):
     ]
     centers = both(strs, 3, "vec_id string, embedding array<double>")
     assert centers[0][0] == "10"  # binary string order, as Spark sorts
+    # the smallest-id non-empty row has a NULL element: it is dirty, so
+    # the seed is the next clean row
+    centers = both([(0, [1.0, None]), (1, [0.0, 1.0]), (2, [3.0, 4.0])], 2)
+    assert [c for c, _ in centers] == [1, 2]
     for rows in (
         [(0, [0.0, 0.0]), (1, [float("nan"), 1.0])],
         [(0, [0.0, 0.0]), (1, [float("-inf"), 1.0])],
@@ -710,6 +734,22 @@ def test_kcenter_regimes_bit_identical_over_the_bound(spark, monkeypatch):
     picks.clear()
     wide = [(i, [float(i), float(i % 3), 1.0]) for i in range(10)]
     assert both(wide, 4) is None
+
+
+def test_kcenter_is_center_is_never_null(spark):
+    """``is_center`` is a boolean on every row: a NULL-id center (the
+    recompute regime's seed, NULL sorting first) is a center, and a row
+    that matches no center is False, not NULL."""
+    from etl_s3_to_redshift_spark.operators.similarity import kcenter_coreset
+
+    rows = [(None, [0.0, 0.0]), (1, [1.0, 1.0]), (2, [3.0, 4.0])]
+    for extra, want in (
+        ([], {None: True, 1: True, 2: True}),
+        ([(3, [0.0, 0.1]), (4, None)], {None: True, 1: True, 2: True, 3: False, 4: False}),
+    ):
+        df = spark.createDataFrame(rows + extra, "vec_id long, embedding array<double>")
+        got = {r["vec_id"]: r["is_center"] for r in kcenter_coreset(df, k=3).collect()}
+        assert got == want
 
 
 def test_round_half_up_matches_spark_round(spark):

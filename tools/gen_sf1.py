@@ -1,6 +1,6 @@
 """Generate an sf1-scale local lake (~6M-row lineitem, 50k docs) by
 replicating /root/testdata/sf0.1 10x with key offsetting, for the
-data-bound scaling point in tools/scaling_probe.py.
+data-bound scaling point recorded in SCALING.md (SCALING_DATA.json).
 
 /root/testdata is read-only, so output goes to .localdata/sf1/ inside the
 repo (gitignored — ~500MB of parquet is derived data, regenerate with
