@@ -24,8 +24,45 @@ def normalize_text(col: Column) -> Column:
 
 
 def words(col: Column) -> Column:
-    """Whitespace tokenization → array<string> (empty-safe)."""
-    return F.filter(F.split(F.trim(col), r"\s+"), lambda t: t != "")
+    """Whitespace tokenization → array<string> (empty-safe; NULL stays
+    NULL). ``array_remove`` drops the empty tokens a leading separator
+    or an empty string leaves, without a lambda, so the expression stays
+    in whole-stage codegen."""
+    return F.array_remove(F.split(F.trim(col), r"\s+"), "")
+
+
+def alpha_words(col: Column) -> Column:
+    """Lowercase-alpha tokenization → array<string>: ``lower(text)``
+    split on runs of non-[a-z], empty tokens dropped (NULL stays NULL).
+    A character-class split every regex engine executes identically —
+    the vocabulary, n-gram and unigram/bigram-model tokenizer of the
+    text family."""
+    return F.array_remove(F.split(F.lower(col), "[^a-z]+"), "")
+
+
+def word_ngrams(toks: Column, n: int) -> Column:
+    """Position-ordered word n-grams of a token array, each n consecutive
+    tokens joined by single spaces; a document shorter than ``n`` tokens
+    gives the empty array (NULL stays NULL).
+
+    Built as a chained zip of n shifted slices — one linear pass; a
+    transform(sequence)+slice form re-walks the array per position (2.5x
+    slower measured on the bigram query at sf1).
+
+    ``toks`` is referenced n + 1 times here, and ``zip_with`` is a
+    higher-order function, which skips subexpression elimination: pass a
+    reference to a token array STAGED as its own projected column, never
+    a bare tokenizer expression, or the split re-runs per reference
+    (measured 2.4x wall on the bigram query at sf0.1)."""
+    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    grams = F.slice(toks, 1, m)
+    for i in range(1, n):
+        grams = F.zip_with(
+            grams,
+            F.slice(toks, i + 1, m),
+            lambda a, b: F.concat(a, F.lit(" "), b),
+        )
+    return grams
 
 
 def token_count_ws(col: Column) -> Column:
@@ -41,7 +78,7 @@ def token_count_bpe(col: Column) -> Column:
 def shingles(words_col: Column, k: int = 3) -> Column:
     """k-word shingles of a token array (distinct), for MinHash/Jaccard.
 
-    Built from sequence+transform — no UDF. Documents shorter than k words
+    Built from ``word_ngrams`` — no UDF. Documents shorter than k words
     yield their full token join as a single shingle so they still
     participate in dedup.
     """
@@ -51,25 +88,13 @@ def shingles(words_col: Column, k: int = 3) -> Column:
 def shingles_all(words_col: Column, k: int = 3) -> Column:
     """k-word shingles WITH duplicates (position-ordered) — the multiset
     form repetition scoring needs (``shingles`` is its distinct
-    projection). Same short-document convention.
-
-    Built as a chained zip of k shifted slices — one linear pass; the
-    earlier transform(sequence)+slice form re-walked the array per
-    shingle position (2.5x measured on the same shape in
-    textops.ngram_top_terms, and this expression sits inside the MinHash
-    hot path)."""
-    n = F.size(words_col)
-    m = F.greatest(n - (k - 1), F.lit(0))
-    grams = F.slice(words_col, 1, m)
-    for i in range(1, k):
-        grams = F.zip_with(
-            grams,
-            F.slice(words_col, i + 1, m),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
+    projection). Same short-document convention; the grams are
+    ``word_ngrams`` (pass a staged column, as there)."""
     # documents shorter than k words keep their full token join as a
     # single shingle so they still participate in dedup
-    return F.when(n >= k, grams).otherwise(F.array(F.concat_ws(" ", words_col)))
+    return F.when(F.size(words_col) >= k, word_ngrams(words_col, k)).otherwise(
+        F.array(F.concat_ws(" ", words_col))
+    )
 
 
 def md5_fingerprint(col: Column) -> Column:

@@ -55,7 +55,7 @@ def _init_symbols(word: Column) -> Column:
     # keeps the trailing empty element the end-of-string boundary makes,
     # so drop empties before appending the marker
     return F.concat(
-        F.filter(F.split(word, "(?!^)"), lambda x: x != ""),
+        F.array_remove(F.split(word, "(?!^)"), ""),
         F.array(F.lit(_EOW)),
     )
 

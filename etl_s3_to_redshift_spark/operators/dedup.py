@@ -498,7 +498,7 @@ def dedup_repeated_chunks(
     # expression referenced from inside the per-chunk lambda is inlined at
     # each use by the analyzer, re-running the split once per chunk —
     # O(tokens x chunks) re-tokenization on long documents (the inlining
-    # trap measured at 2.4-5x in textops.ngram_top_terms)
+    # trap measured at 2.4-5x, see functions/text.word_ngrams)
     staged = df.select(F.col(id_col), words(F.col(text_col)).alias("__w"))
     w = F.col("__w")
     chunk_arr = F.transform(

@@ -2150,9 +2150,7 @@ def kcenter_coreset(
       vectors (dim 768: 1.2 GB, past the default
       ``spark.driver.maxResultSize``) stay in Spark. Inputs the numpy
       replay cannot mirror exactly keep the Spark regime: ids that are
-      not integral/string (the ``_arrow_id_type`` contract) or NULL, and
-      clean-length vectors with a NaN/±Inf element (Spark orders NaN
-      above every value).
+      not integral/string (the ``_arrow_id_type`` contract) or NULL.
     - **Otherwise (the 100 TB regime):** the projection is cached
       (MEMORY_AND_DISK, never a corpus-sized write) and each of the k-1
       rounds is one TakeOrderedAndProject for the single farthest row;
@@ -2168,20 +2166,28 @@ def kcenter_coreset(
 
     Distances are Euclidean, ROUNDED to ``round_to`` before every
     comparison, so selection and assignment are partition-layout- and
-    engine-stable. Dirty rows (NULL / wrong-length / NULL element) are
-    never selectable and carry NULL distance/assignment; ties in
-    distance keep the EARLIER center. Deterministic end to end — the
-    registered query pins a committed-expectation oracle at sf0.01.
+    engine-stable. Dirty rows (NULL / empty / wrong-length, or any
+    element NULL, NaN or ±Inf — the vector is nulled in the first
+    projection) are never selectable and carry NULL distance/assignment;
+    ties in distance keep the EARLIER center. Deterministic end to end
+    — the registered query pins a committed-expectation oracle at
+    sf0.01.
 
     Returns (id, center_rank of nearest, dist to it, is_center).
     """
+    # one dirty-row definition for both regimes: a vector with a NULL,
+    # NaN or ±Inf element becomes NULL here (abs(x) < Infinity is false
+    # for NaN and ±Inf, NULL for NULL, so forall is not true)
     base = corpus.select(
         F.col(id_col).alias("__id"),
         to_double_array(F.col(vec_col)).alias("__v"),
+    ).selectExpr(
+        "__id",
+        "CASE WHEN forall(__v, x -> abs(x) < double('Infinity')) THEN __v END AS __v",
     )
     # seed and dim: the first clean row in id order (deterministic)
     first = (
-        base.filter("__v IS NOT NULL AND size(__v) > 0 AND NOT exists(__v, x -> x IS NULL)")
+        base.filter("__v IS NOT NULL AND size(__v) > 0")
         .orderBy("__id")
         .limit(1)
         .collect()
@@ -2217,8 +2223,7 @@ def kcenter_coreset(
         and (n := base.count()) <= incremental_rows_max
         and n * (8 + 8 * dim) <= _KCENTER_COLLECT_BYTES_MAX
     ):
-        # NULL elements arrive as NaN over Arrow: flag them JVM-side
-        small = base.selectExpr("*", "exists(__v, x -> x IS NULL) AS __nul").toPandas()
+        small = base.toPandas()
         centers = _kcenter_farthest_first(small, int(k), round_to, corpus.sparkSession)
     spark_regime = centers is None
     if spark_regime:
@@ -2318,23 +2323,19 @@ def _round_half_up(x: np.ndarray, scale: int, spark) -> np.ndarray:
 
 
 def _kcenter_farthest_first(pdf: pd.DataFrame, k: int, round_to: int, spark):
-    """kcenter_coreset's driver regime over the collected (__id, __v,
-    __nul) rows, at least one of them clean: the same centers, in the
-    same rank order, as the Spark rounds. Returns [(id, vec)], or None
-    when the input needs the Spark regime (NULL id, or a NaN/±Inf
-    element in a clean-length vector)."""
+    """kcenter_coreset's driver regime over the collected (__id, __v)
+    rows, at least one of them clean (dirty vectors arrive NULL): the
+    same centers, in the same rank order, as the Spark rounds. Returns
+    [(id, vec)], or None when the input needs the Spark regime (a NULL
+    id)."""
     if pdf["__id"].isna().any():
         return None
     pdf = pdf.sort_values("__id", kind="stable")  # code-point = Spark's byte order
-    vecs, nul = pdf["__v"].to_numpy(), pdf["__nul"].eq(True).to_numpy()
+    vecs = pdf["__v"].to_numpy()
     lens = np.array([-1 if v is None else len(v) for v in vecs])
-    # a NULL element makes every Spark distance NULL: the row is dirty,
-    # never the seed (the same first clean row as the Spark seed probe)
-    seed = np.flatnonzero((lens > 0) & ~nul)[0]
-    ok = (lens == lens[seed]) & ~nul
+    seed = np.flatnonzero(lens > 0)[0]  # the Spark seed probe's first clean row
+    ok = lens == lens[seed]
     vt = np.ascontiguousarray(np.stack(vecs[ok]).astype(np.float64).T)
-    if not np.isfinite(vt).all():
-        return None
     ok_ids = pdf["__id"].to_numpy()[ok].tolist()
 
     def dist_to(c: np.ndarray) -> np.ndarray:

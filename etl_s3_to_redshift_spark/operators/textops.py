@@ -12,11 +12,13 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from etl_s3_to_redshift_spark.functions.text import (
+    alpha_words,
     md5_fingerprint,
     shingles,
     shingles_all,
     token_count_bpe,
     token_count_ws,
+    word_ngrams,
     words,
 )
 
@@ -32,6 +34,20 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 STOPWORDS_EN = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
 PUNCT_CHARS = ".,!?;:"
+
+
+def _doc_term_counts(df: DataFrame, id_col: str, toks: Column, *carry: str) -> DataFrame:
+    """(id, *carry, term, tf): each document's term counts — ``toks``
+    (a token array over ``df``'s columns) exploded, then one
+    ``groupBy(id, *carry, term)`` count with map-side combine. ``carry``
+    names columns functionally dependent on the id (a target flag, a
+    document length): keying on them adds no groups, they just ride the
+    aggregate so no consumer joins back to the document table."""
+    return (
+        df.select(F.col(id_col), *carry, F.explode(toks).alias("term"))
+        .groupBy(id_col, *carry, "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
 
 
 def _count_in(tokens: Column, vocab: tuple[str, ...]) -> Column:
@@ -114,7 +130,7 @@ def repetition_scores(
     at any corpus size. The token and shingle arrays are materialized in
     their own projection first — each is consumed 3× below, and inline
     expression references re-run the tokenize/shingle per use (same
-    inlining trap measured in ``ngram_top_terms``/``quality_features``)."""
+    inlining trap ``word_ngrams`` and ``quality_features`` describe)."""
     staged = df.select(
         F.col(id_col),
         words(F.col(text_col)).alias("__toks"),
@@ -154,7 +170,7 @@ def decontaminate(
     # materialize the token arrays before shingling: shingles() references
     # its input inside a per-shingle lambda, and a bare words(...) argument
     # is re-inlined (re-split) once per shingle position — the O(tokens^2)
-    # inlining trap measured in ngram_top_terms
+    # inlining trap ``word_ngrams`` describes
     bench_sh = (
         benchmark.select(words(F.col(text_col)).alias("__w"))
         .select(F.explode(shingles(F.col("__w"), k)).alias("shingle"))
@@ -180,14 +196,11 @@ def tfidf_top_terms(
     pyspark.ml pipeline): explode tokens → term frequencies → document
     frequencies → idf = ln((N+1)/(df+1)) + 1 (smoothed) → window top-k.
 
-    Two shuffles (doc-term agg, term df agg joined back broadcast) + one
-    window — each linear in the token count. Deterministic tiebreak: term
-    asc at equal score."""
+    Three shuffles — the (doc, term) tf aggregate, the term-key df
+    window and the doc-key top-k window — each linear in the token
+    count. Deterministic tiebreak: term asc at equal score."""
     n_docs = df.count()  # scalar action on metadata scale; cheap vs the scan
-    toks = df.select(
-        F.col(id_col), F.explode(words(F.lower(F.col(text_col)))).alias("term")
-    )
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = _doc_term_counts(df, id_col, words(F.lower(F.col(text_col))))
     # Document frequency comes from a WINDOW over the tf frame, not a
     # second aggregate + join: a separate dfreq branch re-derives the
     # whole tokenize+aggregate subtree (column pruning gives the two
@@ -217,12 +230,10 @@ def vocab_top_terms(
     df: DataFrame,
     k: int = 100,
     text_col: str = "text",
-    min_len: int = 1,
 ) -> DataFrame:
     """Corpus-level vocabulary: the ``k`` most frequent lowercase-alpha
     tokens with their counts (BPE-vocab seeding / wordcount). Tokens are
-    ``lower(text)`` split on runs of non-[a-z] — a character-class split
-    every regex engine executes identically.
+    ``alpha_words``: ``lower(text)`` split on runs of non-[a-z].
 
     Scale shape: explode + groupBy(token) with map-side combine — the
     shuffle carries (token, partial_count) pairs, i.e. vocabulary-sized
@@ -232,11 +243,9 @@ def vocab_top_terms(
     materializes the full vocabulary. Tie order (n desc, token asc) is a
     total order, so the k-boundary is deterministic cross-engine.
     """
-    toks = df.select(
-        F.explode(F.split(F.lower(F.col(text_col)), "[^a-z]+")).alias("token")
-    ).filter(F.length("token") >= min_len)
     return (
-        toks.groupBy("token")
+        df.select(F.explode(alpha_words(F.col(text_col))).alias("token"))
+        .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("token").asc())
         .limit(k)
@@ -259,9 +268,9 @@ def unigram_logprob_scores(
     (n_w) → per-doc regroup — with NO corpus-sized materialization. The
     model's only out-of-band input, the scalar n_total, comes from a
     separate map-side-combined aggregate over the RAW text (sum of
-    per-row token counts: same split, same length filter — exact integer
-    equality with sum(tf) by construction), a pure scan that is free
-    next to the tf shuffle. The previous form localCheckpointed the
+    per-row token counts: the same ``alpha_words`` tokens — exact
+    integer equality with sum(tf) by construction), a pure scan that is
+    free next to the tf shuffle. The previous form localCheckpointed the
     CORPUS-sized tf frame just to serve that one scalar; at the sf100
     spill decade the checkpoint write+re-read was the dominant cost
     (the dedup_exact_substrings lesson — don't materialize a corpus-
@@ -272,28 +281,15 @@ def unigram_logprob_scores(
     differs across libms at ~1e-16/token, 10 orders below the rounding
     grain.
     """
-    toks = df.select(
-        F.col(id_col),
-        F.explode(F.split(F.lower(F.col(text_col)), "[^a-z]+")).alias("token"),
-    ).filter(F.length("token") >= 1)
-    tf = toks.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
+    tf = _doc_term_counts(df, id_col, alpha_words(F.col(text_col)))
     # NULL texts must contribute 0 (they contribute no tf rows): coalesce
     # the TEXT, not the size — with spark.sql.ansi.enabled=false, legacy
     # size(NULL) returns -1 (not NULL), which a size-side coalesce would
-    # pass through, silently skewing n_total by -1 per null row. split('')
-    # → [''] → length filter → [] → size 0 under BOTH ANSI settings
-    # (pinned by the ansi_off row of tests/test_config_matrix.py).
+    # pass through, silently skewing n_total by -1 per null row.
+    # alpha_words('') is [] → size 0 under BOTH ANSI settings (pinned by
+    # the ansi_off row of tests/test_config_matrix.py).
     n_total_row = df.select(
-        F.sum(
-            F.size(
-                F.filter(
-                    F.split(
-                        F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[^a-z]+"
-                    ),
-                    lambda t: F.length(t) >= 1,
-                )
-            )
-        ).alias("s")
+        F.sum(F.size(alpha_words(F.coalesce(F.col(text_col), F.lit(""))))).alias("s")
     ).collect()[0]["s"]
     # empty/tokenless corpus: the scored frame below is empty whatever
     # literal we use — 1 keeps log's argument finite so the plan compiles
@@ -306,7 +302,7 @@ def unigram_logprob_scores(
     # form re-evaluates the unmaterialized tf chain (a second full
     # tokenization) on its second consumer. One window = one tf
     # shuffle, one tokenization.
-    wtok = Window.partitionBy("token")
+    wtok = Window.partitionBy("term")
     scored = (
         tf.withColumn("n_w", F.sum("tf").over(wtok))
         .withColumn(
@@ -407,20 +403,19 @@ def dsir_logratio_weights(
     operator consumes the chain once, so dropping the materialization
     just re-tokenizes the corpus twice more; V has no raw-scan form.)
     """
-    toks = df.select(
-        F.col(id_col),
-        target.cast("long").alias("__tgt"),
-        F.explode(F.split(F.lower(F.col(text_col)), "[^a-z]+")).alias("token"),
-    ).filter(F.length("token") >= 1)
-    # __tgt is functionally dependent on the doc id — keying on it adds
-    # no groups, it just rides the aggregate so the scoring pass needs
-    # no join back to the document table.
-    tf = toks.groupBy(id_col, "__tgt", "token").agg(F.count(F.lit(1)).alias("tf"))
+    # __tgt is functionally dependent on the doc id: it rides the tf
+    # aggregate as a carry column
+    tf = _doc_term_counts(
+        df.select(F.col(id_col), target.cast("long").alias("__tgt"), F.col(text_col)),
+        id_col,
+        alpha_words(F.col(text_col)),
+        "__tgt",
+    )
     tf = tf.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     s = tf.agg(
         F.sum(F.col("tf") * F.col("__tgt")).alias("nt"),
         F.sum("tf").alias("na"),
-        F.count_distinct(F.col("token")).alias("v"),
+        F.count_distinct(F.col("term")).alias("v"),
     ).collect()[0]
     n_t, n_all, vocab = int(s["nt"] or 0), int(s["na"] or 0), int(s["v"])
     # The token-key WINDOW is deliberate — the bigram scorer's
@@ -429,7 +424,7 @@ def dsir_logratio_weights(
     # (mild skew, unlike bigram contexts), and the window computes both
     # model sums in the single token shuffle of the already-
     # checkpointed tf.
-    wtok = Window.partitionBy("token")
+    wtok = Window.partitionBy("term")
     logratio = F.log(
         (F.sum(F.col("tf") * F.col("__tgt")).over(wtok) + 1).cast("double")
         / F.lit(float(n_t + vocab))
@@ -465,29 +460,20 @@ def ngram_novelty_scores(
     not appear in the output. Rate is an exact small-integer ratio
     rounded 6 dp; min-id attribution is deterministic cross-engine.
 
-    Scale shape: n-grams are built inside the token array (the chained
-    zip of shifted slices shared with ``ngram_top_terms`` — no
-    posexplode self-join); the wide ops are the (doc, gram) distinct
-    (corpus-sized, hash-partitioned) and the min-over-gram window
-    (gram-key partitions, no global window). At lake scale the gram key
-    is where skew lives — hot boilerplate grams concentrate — but the
-    window carries only (doc, gram, min) triples, not text.
+    Scale shape: n-grams are built inside the token array
+    (``word_ngrams`` — no posexplode self-join) and made distinct IN THE
+    ROW (``array_distinct``; a document's grams all live in its own row,
+    so no (doc, gram) exchange); the wide ops are the min-over-gram
+    window (gram-key partitions, no global window) and the per-doc
+    count. At lake scale the gram key is where skew lives — hot
+    boilerplate grams concentrate — but the window carries only
+    (doc, gram) pairs, not text. Document ids are the table's key: one
+    row per id.
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z]+"), lambda t: F.length(t) >= 1
-    )
-    toks_df = df.select(F.col(id_col), toks.alias("__toks"))
-    t = F.col("__toks")
-    m = F.greatest(F.size(t) - (n - 1), F.lit(0))
-    grams = F.slice(t, 1, m)
-    for i in range(1, n):
-        grams = F.zip_with(
-            grams, F.slice(t, i + 1, m), lambda a, b: F.concat(a, F.lit(" "), b)
-        )
-    g = (
-        toks_df.select(F.col(id_col), F.explode(grams).alias("gram"))
-        .groupBy(id_col, "gram")
-        .agg(F.lit(1).alias("__one"))
+    toks_df = df.select(F.col(id_col), alpha_words(F.col(text_col)).alias("__toks"))
+    g = toks_df.select(
+        F.col(id_col),
+        F.explode(F.array_distinct(word_ngrams(F.col("__toks"), n))).alias("gram"),
     )
     wg = Window.partitionBy("gram")
     scored = g.withColumn("__first", F.min(id_col).over(wg))
@@ -512,42 +498,17 @@ def ngram_top_terms(
     boilerplate phrase detection). Tokens are the same lowercase-alpha
     split; an n-gram is n consecutive tokens joined by single spaces.
 
-    Scale shape: n-grams are built INSIDE the token array as a chained
-    zip of n shifted slices — no posexplode + self-join, no per-doc
-    window sort; the only wide operations are the vocabulary-sized
-    groupBy (map-side combined) and the final TakeOrderedAndProject
-    top-k heap. Tie order (count desc, ngram asc) is total, so the
-    k-boundary is deterministic cross-engine.
-
-    The token array is materialized as its own projection before the
-    gram builder references it: a single ``toks`` expression referenced
-    from inside a higher-order-function lambda is INLINED at each use by
-    the analyzer, so the bare-expression form re-ran split+filter per
-    sequence element — O(tokens^2) re-tokenization per document
-    (measured 2.4x wall on the bigram query at sf0.1).
+    Scale shape: n-grams are built INSIDE the token array
+    (``word_ngrams``, over the token array staged as its own projection)
+    — no posexplode + self-join, no per-doc window sort; the only wide
+    operations are the vocabulary-sized groupBy (map-side combined) and
+    the final TakeOrderedAndProject top-k heap. Tie order (count desc,
+    ngram asc) is total, so the k-boundary is deterministic
+    cross-engine.
     """
-    toks_df = df.select(
-        F.filter(
-            F.split(F.lower(F.col(text_col)), "[^a-z]+"),
-            lambda t: F.length(t) >= 1,
-        ).alias("__toks")
-    )
-    toks = F.col("__toks")
-    # n-grams as a chained zip of n shifted slices — 2.5x faster than the
-    # transform(sequence)+slice form at sf1 (0.90s vs 2.29s measured: the
-    # per-index slice re-walks the array, the zip is one linear pass).
-    # Short docs need no guard: size-(n-1) <= 0 clamps to empty slices,
-    # and zipping empties yields the empty gram array.
-    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    grams = F.slice(toks, 1, m)
-    for i in range(1, n):
-        grams = F.zip_with(
-            grams,
-            F.slice(toks, i + 1, m),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
+    toks_df = df.select(alpha_words(F.col(text_col)).alias("__toks"))
     return (
-        toks_df.select(F.explode(grams).alias("ngram"))
+        toks_df.select(F.explode(word_ngrams(F.col("__toks"), n)).alias("ngram"))
         .groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("ngram").asc())
@@ -577,9 +538,7 @@ def _bigram_tf(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     counted over its sorted gram array in the row (see
     ``bigram_logprob_scores``). Docs with no bigram, NULL text included,
     give no row."""
-    arr = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z]+"), lambda x: x != ""
-    )
+    arr = alpha_words(F.col(text_col))
     m = F.greatest(F.size(arr) - 1, F.lit(0))
     grams = F.zip_with(
         F.slice(arr, 1, m),
@@ -592,7 +551,7 @@ def _bigram_tf(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     # inside a lambda re-evaluates it PER ELEMENT — element_at(<sort
     # expr>, i) re-sorts the doc's grams for every i, O(n² log n) per
     # document (measured: the un-staged form hung the sf0.1 bench; the
-    # ngram_top_terms docstring pins the same trap). Multi-use non-cheap
+    # word_ngrams docstring pins the same trap). Multi-use non-cheap
     # aliases survive CollapseProject, so each step evaluates once per
     # row.
     s = F.col("__s")
@@ -654,7 +613,6 @@ def bigram_logprob_scores(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    vocab_size: int | None = None,
 ) -> DataFrame:
     """Per-document average bigram negative log-probability under the
     corpus's own add-1/2-smoothed bigram model — the next step up from
@@ -687,23 +645,17 @@ def bigram_logprob_scores(
     corpus-sized shuffle left, two in-scan tokenize passes are expected
     to be cheaper than materializing a near-corpus-sized frame to disk,
     so the gate is gone (an sf1/sf10/sf100 A/B of that choice is not
-    recorded). ``vocab_size``: passing it pins V as a literal; None
-    derives it in-plan (same exact integer).
+    recorded).
     """
     tf = _bigram_tf(df, text_col, id_col)
     # model counts: same integers the r8 windows produced (Σ tf per
     # key), so neglogp is the identical double per (w1, w2) key
     model12 = tf.groupBy("w1", "w2").agg(F.sum("tf").alias("c12"))
     model1 = model12.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    if vocab_size is None:
-        # in-plan scalar: count_distinct over the already-aggregated
-        # bigram keys — rides the model12 exchange (AQE ReusedExchange),
-        # replacing the r8–r10 driver-side distinct-count job
-        v_df = model12.agg(F.count_distinct("w2").cast("long").alias("__V"))
-    else:
-        v_df = df.sparkSession.range(1).select(
-            F.lit(int(vocab_size)).cast("long").alias("__V")
-        )
+    # in-plan scalar: count_distinct over the already-aggregated bigram
+    # keys — rides the model12 exchange (AQE ReusedExchange), replacing
+    # the r8–r10 driver-side distinct-count job
+    v_df = model12.agg(F.count_distinct("w2").cast("long").alias("__V"))
     scores = (
         model12.join(model1, "w1")
         .crossJoin(v_df)
@@ -905,7 +857,7 @@ def c4_quality_rules(
     ln = F.col("__lines")
 
     def line_kept(l: Column) -> Column:
-        n_words = F.size(F.filter(F.split(F.trim(l), r"\s+"), lambda t: t != ""))
+        n_words = F.size(words(l))
         return (
             F.rtrim(l).rlike('[.!?"”]$')
             & (n_words >= min_line_words)
@@ -1033,9 +985,11 @@ def bm25_topk(
       distinct query-term set BEFORE any aggregation, so only postings
       for query terms ever shuffle (the inverted-index access path —
       everything else dies in the scan stage);
-    - term frequencies aggregate map-side-combined on (doc, term);
-      document frequencies aggregate from the tf frame (term-count
-      rows) and broadcast back;
+    - term frequencies aggregate map-side-combined on (doc, term) — the
+      explode → aggregate of ``_doc_term_counts``, kept inline here
+      because the semi-join sits BETWEEN the two steps; document
+      frequencies aggregate from the tf frame (term-count rows) and
+      broadcast back;
     - corpus scalars N and avgdl come from one map-side count/sum
       aggregate, broadcast as a 1-row frame (allowlisted 1-row BNLJ,
       the scalar-subquery pattern of q22/ts_seasonal_anomalies);
@@ -1145,6 +1099,51 @@ def _bm25_score_topk(
     )
 
 
+def _bm25_postings(
+    docs: DataFrame, text_col: str, id_col: str, n_buckets: int
+) -> tuple[DataFrame, DataFrame]:
+    """The staged index's inputs from a document frame: ``toked``
+    (id, __toks, dl) and the full-vocabulary postings
+    (id, term, dl, tf, bucket), ``bucket`` = pmod(xxhash64(term),
+    n_buckets) — shared by ``stage_bm25`` and ``append_to_staged_bm25``
+    so appended postings are tokenized and bucketed exactly like staged
+    ones."""
+    toked = docs.select(
+        F.col(id_col), words(F.lower(F.col(text_col))).alias("__toks")
+    ).select(F.col(id_col), F.col("__toks"), F.size("__toks").alias("dl"))
+    tf = _doc_term_counts(toked, id_col, F.col("__toks"), "dl").select(
+        id_col,
+        "term",
+        "dl",
+        "tf",
+        F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)).alias("bucket"),
+    )
+    return toked, tf
+
+
+def _write_bucketed(
+    frame: DataFrame,
+    path: str,
+    n_buckets: int,
+    files_per_bucket: int,
+    split_col: str,
+    mode: str = "overwrite",
+) -> None:
+    """Write ``frame`` partitioned by its ``bucket`` column with
+    ``files_per_bucket`` files per bucket directory. The repartition key
+    must include an in-bucket splitter — ``pmod(xxhash64(split_col),
+    files_per_bucket)`` — because hashing the bucket value alone lands
+    ALL of a bucket's rows in one partition (one file per bucket dir
+    regardless of the knob; ADVICE r9)."""
+    split = F.pmod(F.xxhash64(F.col(split_col)), F.lit(files_per_bucket))
+    (
+        frame.repartition(n_buckets * files_per_bucket, "bucket", split)
+        .write.mode(mode)
+        .partitionBy("bucket")
+        .parquet(path)
+    )
+
+
 def stage_bm25(
     docs: DataFrame,
     path: str,
@@ -1173,11 +1172,8 @@ def stage_bm25(
     vocabulary-partition-pruned scan whose cost scales with the query,
     not the corpus. ``files_per_bucket`` sizes the layout exactly like
     ``IvfIndex.save``: without compaction every upstream task writes a
-    sliver into every bucket dir and probes pay file listing, not scan.
-    The repartition key must include an in-bucket splitter —
-    ``pmod(xxhash64(id), files_per_bucket)`` — because hashing the
-    bucket value alone lands ALL of a bucket's rows in one partition
-    (one file per bucket dir regardless of the knob; ADVICE r9).
+    sliver into every bucket dir and probes pay file listing, not scan
+    (``_write_bucketed``).
 
     Unlike the query-dependent inline semi-join, the staged postings
     cover the FULL vocabulary (queries aren't known at stage time), so
@@ -1185,37 +1181,19 @@ def stage_bm25(
     query-term set — staged==inline is pinned in tests."""
     from etl_s3_to_redshift_spark.operators.table_commit import SnapshotIndex
 
-    toked = docs.select(
-        F.col(id_col), words(F.lower(F.col(text_col))).alias("__toks")
-    ).select(F.col(id_col), F.col("__toks"), F.size("__toks").alias("dl"))
-
-    tf = (
-        toked.select(F.col(id_col), F.col("dl"), F.explode("__toks").alias("term"))
-        .groupBy(id_col, "term", "dl")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn("bucket", F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)))
-    )
+    toked, tf = _bm25_postings(docs, text_col, id_col, n_buckets)
     snap = SnapshotIndex(path)
     stage = snap.begin()
     try:
-        split = F.pmod(F.xxhash64(F.col(id_col)), F.lit(files_per_bucket))
-        (
-            tf.repartition(n_buckets * files_per_bucket, "bucket", split)
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(stage, "postings"))
+        _write_bucketed(
+            tf, os.path.join(stage, "postings"), n_buckets, files_per_bucket, id_col
         )
-        dfc = (
-            tf.groupBy("term", "bucket")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .repartition(
-                n_buckets * files_per_bucket,
-                "bucket",
-                F.pmod(F.xxhash64(F.col("term")), F.lit(files_per_bucket)),
-            )
-        )
-        dfc.write.mode("overwrite").partitionBy("bucket").parquet(
-            os.path.join(stage, "df")
+        _write_bucketed(
+            tf.groupBy("term", "bucket").agg(F.count(F.lit(1)).alias("df")),
+            os.path.join(stage, "df"),
+            n_buckets,
+            files_per_bucket,
+            "term",
         )
         # sum_dl rides along as the EXACT integer total so
         # append_to_staged_bm25 can update avgdl without re-scanning the
@@ -1282,31 +1260,20 @@ def append_to_staged_bm25(
     st = st_frame.collect()[0]
     n_buckets = int(st["n_buckets"])
 
-    toked = new_docs.select(
-        F.col(id_col), words(F.lower(F.col(text_col))).alias("__toks")
-    ).select(F.col(id_col), F.col("__toks"), F.size("__toks").alias("dl"))
-    tf_new = (
-        toked.select(F.col(id_col), F.col("dl"), F.explode("__toks").alias("term"))
-        .groupBy(id_col, "term", "dl")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn("bucket", F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)))
-    )
+    toked, tf_new = _bm25_postings(new_docs, text_col, id_col, n_buckets)
     stage = snap.begin()
     try:
         # carry the staged corpus by reference: hardlink the published
         # postings files into the new version (O(#files) metadata ops,
         # no data copy), then land ONLY the delta rows next to them
         snap.link_from_current(stage, "postings")
-        (
-            tf_new.repartition(
-                n_buckets * files_per_bucket,
-                "bucket",
-                # in-bucket splitter, same layout rule as stage_bm25
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(files_per_bucket)),
-            )
-            .write.mode("append")
-            .partitionBy("bucket")
-            .parquet(os.path.join(stage, "postings"))
+        _write_bucketed(
+            tf_new,
+            os.path.join(stage, "postings"),
+            n_buckets,
+            files_per_bucket,
+            id_col,
+            mode="append",
         )
         df_delta = tf_new.groupBy("term", "bucket").agg(
             F.count(F.lit(1)).alias("df")
@@ -1320,12 +1287,8 @@ def append_to_staged_bm25(
             .groupBy("term", "bucket")
             .agg(F.sum("df").cast("long").alias("df"))
         )
-        merged.repartition(
-            n_buckets * files_per_bucket,
-            "bucket",
-            F.pmod(F.xxhash64(F.col("term")), F.lit(files_per_bucket)),
-        ).write.mode("overwrite").partitionBy("bucket").parquet(
-            os.path.join(stage, "df")
+        _write_bucketed(
+            merged, os.path.join(stage, "df"), n_buckets, files_per_bucket, "term"
         )
 
         new_agg = toked.agg(
@@ -1380,15 +1343,8 @@ def compact_staged_bm25(
     )
     stage = snap.begin()
     try:
-        (
-            postings.repartition(
-                n_buckets * files_per_bucket,
-                "bucket",
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(files_per_bucket)),
-            )
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(stage, "postings"))
+        _write_bucketed(
+            postings, os.path.join(stage, "postings"), n_buckets, files_per_bucket, id_col
         )
         snap.link_from_current(stage, "df")
         snap.link_from_current(stage, "stats")

@@ -974,74 +974,66 @@ def _load_extensions() -> None:
 
 
 # The external driver verifies at most the first 50 ``queries()`` entries
-# per round.  Cumulative r1|..|r8 coverage is 185/185 registered queries,
-# every checked row a triple match.  The 50-per-round cap means driver
-# rows go stale, so each round rotates the slate by freshness: queries
-# REGISTERED this round (no driver evidence at all) outrank every
-# refresh, then the cohort whose newest driver row is OLDEST.  After
-# round 8 the freshness census (CORRECTNESS_r0*.json keys) is r5:35,
-# r6:50, r7:50, r8:50 — so the round-9 slate is the queries registered
-# this round (the staged BM25 probe and the all-saved hybrid), the full
-# 35-query r5 remainder (exactly the cohort VERDICT r8 prescribed),
-# then the oldest-registered r6-cohort entries up to the cap.  Every
+# per round, so this list decides which rows it refreshes. Queries whose
+# plan or plan-building code changed since their last driver row go
+# first: a driver row only vouches for the shape it checked. Every
 # query stays verifiable locally via tools/check_oracle.py (no cap).
 _DRIVER_FIRST = [
-    # registered round 10 (zero driver evidence yet): the URL-level
-    # curation funnel and the PSL registered-domain lookup
+    # the text family's shared tokenizers, n-gram builder and per-doc
+    # term count, and k-center's dirty-row definition, reach these
+    "data_curation_funnel",
+    "data_dsir_weights",
+    "data_pack_sequences",
+    "data_split_leakage",
+    "data_token_budget",
+    "dedup_containment",
+    "dedup_exact_substrings",
+    "dedup_groups_connected",
+    "dedup_groups_incremental",
+    "dedup_keep_best_quality",
+    "dedup_minhash_lsh",
+    "dedup_minhash_staged",
+    "dedup_ngram_jaccard",
+    "dedup_repeated_chunks",
+    "dedup_simhash",
+    "lateral_posexplode",
+    "sim_hybrid_rrf",
+    "sim_hybrid_rrf_ann",
+    "sim_hybrid_rrf_ann_saved",
+    "sim_hybrid_rrf_staged",
+    "text_bigram_logprob",
+    "text_bigram_topk",
+    "text_bm25_topk",
+    "text_bm25_topk_appended",
+    "text_bm25_topk_staged",
+    "text_bpe_merges",
+    "text_bpe_tokenize",
+    "text_c4_rules",
+    "text_chunk_windows",
+    "text_decontaminate",
+    "text_gopher_rules",
+    "text_lang_id",
+    "text_ngram_novelty",
+    "text_perplexity_buckets",
+    "text_quality",
+    "text_repetition",
+    "text_tfidf_topterms",
+    "text_token_stats",
+    "text_tokenizer_report",
+    "text_unigram_logprob",
+    "text_vocab_topk",
+    "text_zipf_fit",
+    "emb_kcenter_coreset",
+    # round-11 rewrites never slated (text_bigram_logprob,
+    # text_bm25_topk_staged and sim_hybrid_rrf_staged are above)
+    "entity_groups_fuzzy",
+    "entity_groups_sparse_chain",
+    # the previous slate's head fills the places left under the cap
     "web_curation_funnel",
     "web_psl_domains",
-    # r6 cohort: all 41 queries whose newest driver row is round 6
-    # (CORRECTNESS_r06 minus every later slate — the freshness rotation)
     "agg_bool_bit_suite",
     "agg_corr_regression",
     "approx_heavy_hitters",
-    "approx_sketches",
-    "data_curation_funnel",
-    "data_dsir_weights",
-    "data_token_budget",
-    "data_training_order",
-    "dedup_exact_substrings",
-    "dedup_groups_incremental",
-    "dedup_keep_best_quality",
-    "dedup_lines_keepfirst",
-    "dedup_repeated_chunks",
-    "dedup_semantic_clusters",
-    "emb_bitext_margin",
-    "emb_bitext_margin_ann",
-    "emb_hard_negatives",
-    "emb_kcenter_coreset",
-    "emb_label_centroids",
-    "emb_prototypes_prune",
-    "grouping_sets_orders",
-    "hist_equidepth_deciles",
-    "mm_resize_thumbs",
-    "null_safe_join_events",
-    "regex_suite",
-    "rollup_incremental_merge",
-    "scalar_datetime_suite",
-    "scalar_math_conditional",
-    "scalar_try_safe_suite",
-    "sim_hybrid_rrf",
-    "skew_key_profile",
-    "text_bm25_topk",
-    "text_c4_rules",
-    "text_decontaminate",
-    "text_gopher_rules",
-    "text_ngram_novelty",
-    "text_perplexity_buckets",
-    "text_tokenizer_report",
-    "ts_gapfill_hourly",
-    "udf_minmax_normalize",
-    "w4_value_range_frames",
-    # r7 cohort head: fills the slate to the 50-cap; the remainder
-    # leads round 11
-    "agg_mode_median",
-    "anti_join_dormant_customers",
-    "array_map_suite",
-    "asof_next_purchase",
-    "attr_multi_touch",
-    "cohort_retention_weekly",
-    "cross_join_region_nation",
 ]
 
 

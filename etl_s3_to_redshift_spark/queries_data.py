@@ -678,8 +678,8 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc=(
         "Per-doc top-3 terms by smoothed TF-IDF, pure DataFrame ops "
-        "(operators/textops.tfidf_top_terms): tf agg → df agg → broadcast "
-        "idf join → window top-k. Rounded to 6 dp (ln differs across libm "
+        "(operators/textops.tfidf_top_terms): (doc, term) tf agg → "
+        "term-key df window → per-doc window top-k. Rounded to 6 dp (ln differs across libm "
         "implementations in the last ulp); rank computed on the rounded "
         "score with a term tiebreak so both engines rank identically."
     ),

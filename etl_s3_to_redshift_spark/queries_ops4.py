@@ -428,10 +428,10 @@ def merge_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Per-document mean unigram surprisal under the corpus's own ML "
         "unigram model (operators/textops.unigram_logprob_scores) — the "
         "cheap perplexity proxy used for corpus quality filtering. One "
-        "vocabulary-sized groupBy builds the model (total-count scalar "
-        "is a global window over the vocab frame, not a corpus rescan); "
-        "scoring is a broadcast token join + per-doc aggregate, no "
-        "UDFs. Mean rounded 6 dp (ln drifts ~1e-16/token across libms, "
+        "tokenization into the per-(doc, token) tf aggregate, a "
+        "token-key window for the model counts and a per-doc regroup; "
+        "the total-count scalar is one map-side-combined sum over the "
+        "raw text, no model broadcast, no UDFs. Mean rounded 6 dp (ln drifts ~1e-16/token across libms, "
         "10 orders below the grain)."
     ),
 )

@@ -265,10 +265,10 @@ def delta_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    toks = (
-        _t(spark, sf_dir, "documents")
-        .select(F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("token"))
-        .filter(F.length("token") >= 1)
+    from etl_s3_to_redshift_spark.functions.text import alpha_words
+
+    toks = _t(spark, sf_dir, "documents").select(
+        F.explode(alpha_words(F.col("text"))).alias("token")
     )
     vocab = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     totals = vocab.agg(
@@ -1197,10 +1197,11 @@ def dq_orders_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "separates shuffled-word salad from natural text where the "
         "unigram model cannot. Smoothed probability is the exact "
         "integer ratio (2c12+1)/(2c1+V), so both engines divide "
-        "identical integers; mean rounded 6 dp. Plan mirrors the "
-        "unigram scorer: one tokenization into the (doc, w1, w2) tf "
-        "aggregate, model counts via windows over the bigram/context "
-        "keys — bigram-vocab-sized shuffles, no model broadcast, no "
+        "identical integers; mean rounded 6 dp. The per-(doc, w1, w2) "
+        "tf is a run-length count over each document's sorted bigram "
+        "array in the row (no corpus-sized exchange); the (w1, w2) and "
+        "w1 model counts are map-side-combined aggregates joined back "
+        "to tf — bigram-vocab-sized shuffles, no model broadcast, no "
         "corpus rescan."
     ),
 )

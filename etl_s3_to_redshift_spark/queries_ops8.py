@@ -697,10 +697,11 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "whose corpus-wide first occurrence (min doc id) is this "
         "document — the incremental-crawl 'does this batch add "
         "anything' signal next to dedup's 'is this document a copy'. "
-        "Trigrams build inside the token array (zip of shifted slices, "
-        "no posexplode self-join); wide ops are the (doc, gram) "
-        "distinct and the min-over-gram-key window. Docs with < 3 "
-        "tokens have no trigrams and are absent by definition."
+        "Trigrams build inside the token array (functions/text."
+        "word_ngrams, no posexplode self-join) and are made distinct in "
+        "the row; wide ops are the min-over-gram-key window and the "
+        "per-doc count. Docs with < 3 tokens have no trigrams and are "
+        "absent by definition."
     ),
 )
 def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:

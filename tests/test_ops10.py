@@ -275,8 +275,8 @@ def test_unigram_logprob_null_text_invariant_under_ansi(spark):
     raw-scan n_total summed size(split(text)) per row, and with
     spark.sql.ansi.enabled=false legacy size(NULL) returns -1 (not
     NULL), silently subtracting 1 per null row from the model's token
-    total. The fix coalesces the TEXT to '' (split('') → [''] → length
-    filter → [], size 0 under both settings)."""
+    total. The fix coalesces the TEXT to '' (alpha_words('') is [],
+    size 0 under both settings)."""
     from etl_s3_to_redshift_spark.operators.textops import unigram_logprob_scores
 
     base = spark.createDataFrame(
@@ -320,6 +320,89 @@ def test_bigram_tf_null_text_emits_no_run_row_under_either_ansi(spark):
             assert got == [(1, "aa", "bb", 2), (1, "bb", "aa", 1)], (ansi, got)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", old)
+
+
+_TOKENIZER_TEXTS = [
+    None,
+    "",
+    " ",
+    "   \t\n ",
+    "  lead and trail  ",
+    "\ttab\tsep\t",
+    "new\nline\n",
+    "abc 123 d4e 2024",
+    "Hi, there! ...end.",
+    "\u00e4 \u00c4b c\u00e4",
+    "a  b",
+]
+
+
+def test_tokenizers_equal_the_lambda_forms_under_either_ansi(spark):
+    """``words`` and ``alpha_words`` drop empty tokens with
+    ``array_remove``, not a lambda ``filter``; they return exactly what
+    the lambda forms return — arrays and sizes, NULL text included."""
+    from pyspark.sql import functions as F
+
+    from etl_s3_to_redshift_spark.functions.text import alpha_words, words
+
+    df = spark.createDataFrame(list(enumerate(_TOKENIZER_TEXTS)), "i int, text string")
+    t = F.col("text")
+    pairs = [
+        (words(t), F.filter(F.split(F.trim(t), r"\s+"), lambda x: x != "")),
+        (
+            alpha_words(t),
+            F.filter(F.split(F.lower(t), "[^a-z]+"), lambda x: F.length(x) >= 1),
+        ),
+    ]
+    cols = []
+    for j, (new, ref) in enumerate(pairs):
+        cols += [
+            new.alias(f"n{j}"),
+            ref.alias(f"r{j}"),
+            F.size(new).alias(f"sn{j}"),
+            F.size(ref).alias(f"sr{j}"),
+        ]
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            rows = df.select("i", *cols).collect()
+            assert len(rows) == len(_TOKENIZER_TEXTS)
+            for r in rows:
+                for j in range(len(pairs)):
+                    assert r[f"n{j}"] == r[f"r{j}"], (ansi, j, r)
+                    assert r[f"sn{j}"] == r[f"sr{j}"], (ansi, j, r)
+            assert rows[4]["n0"] == ["lead", "and", "trail"]
+            assert rows[9]["n1"] == ["b", "c"]  # [^a-z] splits on the umlaut
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+
+
+def test_word_ngrams_match_itertools(spark):
+    """``word_ngrams(toks, n)`` equals the sliding window of n
+    consecutive tokens for n = 1..4 on token arrays shorter than, equal
+    to and longer than n; NULL stays NULL."""
+    import itertools
+
+    from pyspark.sql import functions as F
+
+    from etl_s3_to_redshift_spark.functions.text import word_ngrams
+
+    docs = [None] + [[f"t{j % 3}" for j in range(m)] for m in range(6)]
+    df = spark.createDataFrame(list(enumerate(docs)), "i int, toks array<string>")
+    ns = range(1, 5)
+    rows = df.select(
+        "i", *[word_ngrams(F.col("toks"), n).alias(f"g{n}") for n in ns]
+    ).collect()
+    for r in rows:
+        toks = docs[r["i"]]
+        for n in ns:
+            if toks is None:
+                assert r[f"g{n}"] is None
+                continue
+            shifted = (itertools.islice(toks, k, None) for k in range(n))
+            want = [" ".join(g) for g in zip(*shifted)]
+            assert r[f"g{n}"] == want, (toks, n, r[f"g{n}"])
 
 
 def test_perplexity_buckets_rowcount_matches_scores(spark):
@@ -650,6 +733,14 @@ def test_kcenter_dirty_rows_never_selected(spark):
         if dirty in got:
             assert not got[dirty]["is_center"]
             assert got[dirty]["center_rank"] is None
+    # a NaN or -Inf element makes the row dirty too: it is never a
+    # center and carries NULL metrics, not a NaN distance
+    for bad in (float("nan"), float("-inf")):
+        rows = [(0, [0.0, 0.0]), (1, [bad, 1.0]), (2, [3.0, 4.0]), (3, [1.0, 1.0])]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        got = {r["vec_id"]: r for r in kcenter_coreset(df, k=3).collect()}
+        assert {i for i, r in got.items() if r["is_center"]} == {0, 2, 3}, (bad, got)
+        assert tuple(got[1])[1:] == (None, None, False), (bad, got[1])
 
 
 def test_kcenter_regimes_bit_identical_over_the_bound(spark, monkeypatch):
@@ -660,7 +751,8 @@ def test_kcenter_regimes_bit_identical_over_the_bound(spark, monkeypatch):
     side of the bound a deployment lands on (VERDICT r7 #5). Adversarial
     frames cover dirty rows, the early stop, rounded-distance ties, k
     past the distinct points, k=1, an all-dirty corpus and string ids;
-    NaN/Inf elements and NULL ids must keep the Spark regime."""
+    a NaN/-Inf element makes the row dirty in both regimes, and NULL ids
+    must keep the Spark regime."""
     from etl_s3_to_redshift_spark.operators import similarity
     from etl_s3_to_redshift_spark.operators.similarity import kcenter_coreset
 
@@ -719,15 +811,18 @@ def test_kcenter_regimes_bit_identical_over_the_bound(spark, monkeypatch):
     # the seed is the next clean row
     centers = both([(0, [1.0, None]), (1, [0.0, 1.0]), (2, [3.0, 4.0])], 2)
     assert [c for c, _ in centers] == [1, 2]
-    for rows in (
-        [(0, [0.0, 0.0]), (1, [float("nan"), 1.0])],
-        [(0, [0.0, 0.0]), (1, [float("-inf"), 1.0])],
-        [(None, [0.0, 0.0]), (1, [1.0, 1.0])],
-    ):
-        picks.clear()
+    for bad in (float("nan"), float("-inf")):
+        rows = [(0, [0.0, 0.0]), (1, [bad, 1.0])]
+        assert [c for c, _ in both(rows, 2)] == [0]  # the driver regime ran
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        kcenter_coreset(df, k=2).collect()
-        assert picks == [None], rows  # the Spark regime ran
+        got = {r["vec_id"]: tuple(r)[1:] for r in kcenter_coreset(df, k=2).collect()}
+        assert got[1] == (None, None, False), (bad, got)  # dirty
+    picks.clear()
+    df = spark.createDataFrame(
+        [(None, [0.0, 0.0]), (1, [1.0, 1.0])], "vec_id long, embedding array<double>"
+    )
+    kcenter_coreset(df, k=2).collect()
+    assert picks == [None]  # a NULL id keeps the Spark regime
     # past the collect byte budget (10 rows x 32 bytes here) the driver
     # regime is never entered
     monkeypatch.setattr(similarity, "_KCENTER_COLLECT_BYTES_MAX", 300)

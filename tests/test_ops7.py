@@ -728,9 +728,3 @@ def test_bigram_runlength_tf_matches_groupby_reference(spark):
     ids = {t[0] for t in got}
     assert not {2, 3, 4} & ids
     assert (5, 4) in {(t[0], t[1]) for t in got}
-    # vocab_size passed explicitly must pin the same V the in-plan
-    # count_distinct derives
-    got_pinned = {
-        tuple(r) for r in bigram_logprob_scores(docs, vocab_size=vocab).collect()
-    }
-    assert got_pinned == ref
